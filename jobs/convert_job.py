@@ -66,28 +66,18 @@ def main() -> None:
     )
 
     if args.link:
-        from marc2rdf_spark.operators.components import (
-            canonicalize_triples,
-            connected_components,
-        )
-        from marc2rdf_spark.operators.linking import (
-            link_mentions,
-            mention_nodes,
-            sameas_edges,
-        )
+        from marc2rdf_spark.plans.pipeline import full_pipeline
 
         auth_path = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             "fixtures", "golden", "authorities.parquet",
         )
-        mentions = mention_nodes(
+        # the library's link tail, deduplicating on the full triple key
+        # (a URI and a literal with the same text are distinct triples)
+        triples = full_pipeline(
             triples,
+            spark.read.parquet(auth_path),
             ["http://def.bibsys.no/xmlns/radatana/1.0#catalogueName"],
-        )
-        links = link_mentions(mentions, spark.read.parquet(auth_path))
-        comps = connected_components(sameas_edges(links))
-        triples = canonicalize_triples(triples, comps).dropDuplicates(
-            ["subj", "pred", "obj", "lang", "dtype"]
         )
         triples.write.mode("overwrite").parquet(f"{args.out}/triples_canonical")
         # count what was committed — not a recompute of the link tail

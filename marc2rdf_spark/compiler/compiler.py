@@ -5,7 +5,8 @@ The declarative mapping (tags.{tagPattern}.subfield.{code} ->
 predicate/object specs, /root/reference/config/templates/
 mapping_skeleton.json) is flattened once on the driver into a small
 BROADCAST spec table (specs.py) plus regex-dispatch registries; the
-conversion plan is then mapping-size-independent:
+conversion plan then grows only with the regex_split registry (see
+below), not with the number of rules:
 
     records
       -> one explode of a unified field array (rec|cf|df rows)
@@ -22,15 +23,26 @@ conversion plan is then mapping-size-independent:
            (parent + rdf:type + relation-subfield triples) -> inline().
 
 Why this shape at 100 TB (vs unrolling rules into the expression tree,
-kept as unrolled.py for cross-checking): the plan is mapping-size-
-independent — regex patterns ride in the broadcast spec table as string
-columns consumed by pattern-column regexp expressions (compiled-last-
-pattern cache per site), so driver plan-build, per-task plan
-deserialization, and codegen stay constant as mappings grow; the only
-join is a broadcast of a few hundred spec rows.  One scan, no shuffle
-before the final dedup.  The hot path must stay inside whole-stage
-codegen because interpreted evaluation is allocation-bound and was the
-measured multi-executor scaling bottleneck (BENCH/BASELINE.md).
+kept as unrolled.py for cross-checking): regex patterns ride in the
+broadcast spec table as string columns consumed by pattern-column
+regexp expressions (compiled-last-pattern cache per site), so driver
+plan-build, per-task plan deserialization, and codegen do not grow with
+the number of rules; the only join is a broadcast of a few hundred spec
+rows.  The one exception is regex_split: _dispatch_split is a CASE with
+one branch per distinct split pattern in the registry, and it is built
+twice (object pipeline and relation pipeline), so the plan grows
+linearly with that registry.  One scan, no shuffle before the final
+dedup.  The hot path must stay inside whole-stage codegen because
+interpreted evaluation is allocation-bound and was the measured
+multi-executor scaling bottleneck (BENCH/BASELINE.md).
+
+Plan-size rule for both branches: every pipeline stage references its
+predecessor exactly once.  The scalar branch gets this from stacked
+projections; the array branch from putting the per-row spec switch
+inside the element lambda.  A stage written when(on, f(prev))
+.otherwise(prev) doubles the tree per stage — exponential in the
+number of stages (tests/test_compiler_stages.py pins the analyzed
+plan size).
 """
 
 from __future__ import annotations
@@ -137,7 +149,15 @@ class MappingCompiler:
     # -- generic micro-operator pipeline (rdfmodeler.rb:49-135) ----------
     def _pipeline(self, o: Column, s, field: Column) -> Column:
         """s: accessor fn, s('substr_off') etc. returns the spec column —
-        works for the spec struct column and for rel-array lambda vars."""
+        works for the spec struct column and for rel-array lambda vars.
+
+        Each stage references its predecessor array ONCE: the per-row
+        spec switch lives inside the element lambda
+        (transform(arr, x -> when(on, f(x)).otherwise(x))).  The form
+        when(on, f(arr)).otherwise(arr) would copy the predecessor tree
+        twice per stage: over four stages the _dispatch_split CASE is
+        replicated 16x in each of the object and relation pipelines,
+        ~7x the analyzed plan size of the skeleton mapping."""
         regs = self.regs
 
         piece = o.substr(s("substr_off") + F.lit(1), s("substr_len"))
@@ -160,10 +180,15 @@ class MappingCompiler:
                 F.element_at(s("subst_map"), last)
             )
 
-        arr = F.when(
-            s("subst_orig").isNotNull(),
-            F.filter(F.transform(arr, _subst), lambda x: x.isNotNull()),
-        ).otherwise(arr)
+        # a matched-but-unmapped element becomes null and is dropped;
+        # without a substitute spec, elements pass through untouched
+        has_subst = s("subst_orig").isNotNull()
+        arr = F.filter(
+            F.transform(
+                arr, lambda x: F.when(has_subst, _subst(x)).otherwise(x)
+            ),
+            lambda x: ~has_subst | x.isNotNull(),
+        )
 
         # F.array_join only takes a literal delimiter; the SQL function
         # accepts a column — call it directly
@@ -180,17 +205,20 @@ class MappingCompiler:
             ),
             F.coalesce(s("combine_sep"), F.lit("")),
         )
-        arr = F.when(
-            s("combine").isNotNull(),
-            F.transform(arr, lambda _: combined),
-        ).otherwise(arr)
-
-        arr = F.when(
-            s("strip_re").isNotNull(),
-            F.transform(arr, lambda x: F.regexp_replace(x, s("strip_re"), "")),
-        ).otherwise(arr)
-
-        return F.when(s("urlize"), F.transform(arr, urlize)).otherwise(arr)
+        arr = F.transform(
+            arr,
+            lambda x: F.when(s("combine").isNotNull(), combined).otherwise(x),
+        )
+        arr = F.transform(
+            arr,
+            lambda x: F.when(
+                s("strip_re").isNotNull(),
+                F.regexp_replace(x, s("strip_re"), ""),
+            ).otherwise(x),
+        )
+        return F.transform(
+            arr, lambda x: F.when(s("urlize"), urlize(x)).otherwise(x)
+        )
 
     # -- conditions -> predicate (rdfmodeler.rb:200-234) ------------------
     def _predicate(self, field: Column, s, sf_first: Column) -> Column:
@@ -576,11 +604,12 @@ class MappingCompiler:
         simple_df = pre.select(*kept, F.inline(arr))
 
         # --- array branch (complex specs; interpreted evaluator) -------
-        objs = self._pipeline(src, s, field)
-        objs = F.when(
-            kind == "cf",
-            F.filter(objs, lambda o: ~is_blank_stripped(o)),
-        ).otherwise(objs)
+        # controlfield blank-object guard, switched per element so objs
+        # is referenced once (see _pipeline)
+        objs = F.filter(
+            self._pipeline(src, s, field),
+            lambda o: (kind != "cf") | ~is_blank_stripped(o),
+        )
         emission = self._emission(subj, field, spec, pred)
         triples_arr = F.flatten(F.transform(objs, emission))
         # F.inline = explode + struct-expansion in ONE generator: one

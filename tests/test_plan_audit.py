@@ -4,7 +4,7 @@ The contract gate proves values; these tests prove the PLANS stay the
 ones designed for 100 TB: zero-shuffle operators stay zero-shuffle,
 broadcast-designed joins stay broadcast, and nothing grows a cartesian
 product.  Only fast-to-plan queries are pinned here (plan construction
-only — nothing executes); the full 22-query audit is run by
+only — nothing executes); the full audit is run by
 ``python tools/plan_audit.py`` which regenerates BENCH/PLANS.md.
 """
 
@@ -94,3 +94,42 @@ def test_full_audit_expectations_resolve(queries):
 
     missing = [n for n in EXPECT if n not in queries]
     assert not missing, f"plan_audit EXPECT has stale names: {missing}"
+
+
+def test_audit_cli_parses_out_apart_from_the_query_filter():
+    """``--out PATH`` must not leak PATH into the query filter (that
+    made the audit match zero queries and exit 0)."""
+    from tools.plan_audit import parse_args
+
+    args = parse_args(["--out", "foo.md"])
+    assert (args.out, args.queries) == ("foo.md", [])
+    args = parse_args(["kg_convert_skeleton", "--out", "foo.md"])
+    assert (args.out, args.queries) == ("foo.md", ["kg_convert_skeleton"])
+    for argv in (["--out"], ["no_such_query"]):
+        with pytest.raises(SystemExit) as exc:
+            parse_args(argv)
+        assert exc.value.code == 2, argv
+
+
+def test_audit_fails_when_the_filter_matches_nothing(monkeypatch, tmp_path):
+    import __spark_entry__ as entrymod
+    from tools.plan_audit import audit
+
+    monkeypatch.setattr(entrymod, "queries", lambda: {})
+    out = tmp_path / "PLANS.md"
+    assert audit(["kg_convert_skeleton"], str(out)) == 1
+    assert not out.exists()
+
+
+def test_read_schema_width_counts_top_level_fields():
+    from tools.plan_audit import read_schema_width
+
+    assert read_schema_width("ReadSchema: struct<url:string>") == 1
+    assert read_schema_width(
+        "ReadSchema: struct<a:struct<b:int,c:map<string,int>>,"
+        "d:array<struct<e:int,f:int>>,g:string>"
+    ) == 3
+    assert read_schema_width("ReadSchema: struct<>") == 0
+    # cut short by spark.sql.maxMetadataStringLength: a lower bound
+    assert read_schema_width("ReadSchema: struct<a:int,b:struct<c:i...") \
+        == "2+"

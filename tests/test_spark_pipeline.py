@@ -132,3 +132,35 @@ def test_three_way_parity_unrolled_vs_hybrid_vs_oracle(records_df):
     got_hybrid = _spark_triples(records_df, mapping)
     exp = _oracle_triples(mapping)
     assert got_unrolled == got_hybrid == exp
+
+
+def test_full_pipeline_keeps_uri_and_literal_with_same_text(spark):
+    """The link tail (full_pipeline, also the tail of
+    jobs/convert_job.py --link) dedups on the full triple key: the URI
+    <http://x> and the literal "http://x" are different triples and
+    both survive, while an exact repeat collapses."""
+    import os
+
+    from marc2rdf_spark.plans.pipeline import full_pipeline
+
+    golden = os.path.join(os.path.dirname(__file__), "..", "fixtures", "golden")
+    label = "http://def.bibsys.no/xmlns/radatana/1.0#catalogueName"
+    s, p = "http://example.org/rec/1", "http://purl.org/dc/terms/relation"
+    rows = [
+        (s, p, "http://x", True, None, None),
+        (s, p, "http://x", False, None, None),
+        (s, p, "http://x", False, None, None),
+        # a mention that links, so the tail has a component to rewrite
+        ("http://example.org/person/1", label, "Borgen, Johan", False,
+         None, None),
+    ]
+    triples = spark.createDataFrame(
+        rows, "subj string, pred string, obj string, obj_is_uri boolean, "
+              "lang string, dtype string",
+    )
+    authorities = spark.read.parquet(os.path.join(golden, "authorities.parquet"))
+    out = [tuple(r) for r in full_pipeline(triples, authorities, [label])
+           .select(TRIPLE_COLS).collect()]
+    same_text = sorted(t[3] for t in out if t[2] == "http://x")
+    assert same_text == [False, True]
+    assert len(out) == 3

@@ -31,11 +31,14 @@ here would either run the job or describe only one round.  Their plan
 stories are told in BENCH/CC_TAIL.md and the operator docstrings.
 
 Usage: python tools/plan_audit.py [--out BENCH/PLANS.md] [query ...]
-Exit code 1 if any pinned expectation fails.
+Exit code 1 if any pinned expectation fails or no audited query is
+left to run; exit code 2 (usage error) for a query name that is not
+audited.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -355,6 +358,25 @@ def parse_tree_ops(formatted: str) -> list[str]:
     return ops
 
 
+def read_schema_width(line: str) -> int | str:
+    """Top-level field count of a ``ReadSchema: struct<...>`` line:
+    commas at nesting depth 1 (inside the outer struct<> only).  A
+    payload cut short by spark.sql.maxMetadataStringLength gives a
+    lower bound, shown as ``N+``."""
+    payload = line.split(":", 1)[1].strip()
+    if not payload.startswith("struct<") or payload == "struct<>":
+        return 0
+    depth, fields = 0, 1
+    for ch in payload:
+        if ch == "<":
+            depth += 1
+        elif ch == ">":
+            depth -= 1
+        elif ch == "," and depth == 1:
+            fields += 1
+    return fields if depth == 0 else f"{fields}+"
+
+
 def parse_scans(formatted: str) -> list[dict]:
     """(table, n_columns, pushed_filters) for each parquet scan."""
     scans = []
@@ -369,7 +391,7 @@ def parse_scans(formatted: str) -> list[dict]:
                 m = re.search(r"([a-z_]+)\.parquet", ls)
                 cur["loc"] = m.group(1) if m else ls[-40:]
             elif ls.startswith("ReadSchema:"):
-                cur["cols"] = ls.count(":")  # fields in struct<a:t,...>
+                cur["cols"] = read_schema_width(ls)
             elif ls.startswith("PushedFilters:"):
                 cur["pushed"] = ls.split(":", 1)[1].strip()
             elif not ls:
@@ -379,13 +401,6 @@ def parse_scans(formatted: str) -> list[dict]:
 
 def audit(only: list[str], out_path: str) -> int:
     import __spark_entry__ as entrymod
-    from marc2rdf_spark.session import get_spark
-
-    spark = get_spark(cores=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    jvm = spark._jvm
-    fmt = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted")
 
     qs = entrymod.queries()
     names = []
@@ -396,6 +411,17 @@ def audit(only: list[str], out_path: str) -> int:
             print(f"{n}: not in queries() — skipping", file=sys.stderr)
             continue
         names.append(n)
+    if not names:
+        # an empty audit must not pass as a green one
+        print("no audited query matched the filter", file=sys.stderr)
+        return 1
+
+    from marc2rdf_spark.session import get_spark
+
+    spark = get_spark(cores=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    fmt = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
     rows, failures = [], []
     for name in names:
         exp = EXPECT[name]
@@ -468,10 +494,22 @@ def audit(only: list[str], out_path: str) -> int:
     return 1 if failures else 0
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Audit the physical plans of the batch contract "
+                    "queries and write the PLANS table.")
+    ap.add_argument("--out", default="BENCH/PLANS.md",
+                    help="markdown report path (default: %(default)s)")
+    ap.add_argument("queries", nargs="*",
+                    help="audit only these queries (default: all)")
+    args = ap.parse_args(argv)
+    unknown = sorted(set(args.queries) - set(EXPECT))
+    if unknown:
+        ap.error(f"not audited queries: {', '.join(unknown)} "
+                 f"(audited: {', '.join(EXPECT)})")
+    return args
+
+
 if __name__ == "__main__":
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    out = "BENCH/PLANS.md"
-    for i, a in enumerate(sys.argv[1:]):
-        if a == "--out":
-            out = sys.argv[i + 2]
-    sys.exit(audit(args, out))
+    args = parse_args()
+    sys.exit(audit(args.queries, args.out))
