@@ -22,8 +22,8 @@ below), not with the number of rules:
            Spark evaluates interpreted — per-object triple array
            (parent + rdf:type + relation-subfield triples) -> inline().
 
-Why this shape at 100 TB (vs unrolling rules into the expression tree,
-kept as unrolled.py for cross-checking): regex patterns ride in the
+Why this shape at 100 TB (vs unrolling every rule into the expression
+tree, whose plan grows with the mapping): regex patterns ride in the
 broadcast spec table as string columns consumed by pattern-column
 regexp expressions (compiled-last-pattern cache per site), so driver
 plan-build, per-task plan deserialization, and codegen do not grow with
@@ -130,8 +130,8 @@ def _dispatch_split(o: Column, id_col: Column, patterns: list[str]) -> Column:
 
 
 class MappingCompiler:
-    """Same public API as the original unrolled compiler; plan shape per
-    module docstring."""
+    """mapping -> ``convert(records)`` triples DF; plan shape per module
+    docstring."""
 
     def __init__(
         self,

@@ -1,12 +1,12 @@
 """Mapping flattener: marc2rdf JSON mapping -> emission-spec ROWS +
 regex-dispatch registries.
 
-Instead of unrolling every rule into the expression tree (see
-unrolled.py — correct but its plan grows with the mapping, costing
-driver build time and per-task deserialization), the mapping becomes a
-small broadcast TABLE: one spec row per (concrete tag x rule x
-subfield-emission), with maps/arrays as real columns and regex patterns
-interned into dispatch registries (a handful of distinct patterns per
+Instead of unrolling every rule into the expression tree (correct, but
+its plan grows with the mapping, costing plan-build time and per-task
+deserialization), the mapping becomes a small broadcast TABLE: one
+spec row per (concrete tag x rule x subfield-emission), with
+maps/arrays as real columns and regex patterns interned into dispatch
+registries (a handful of distinct patterns per
 mapping, compiled as literals so codegen keeps them).
 
 Semantics preserved exactly (SURVEY.md §2.2-2.4 / rdfmodeler.rb):

@@ -5,8 +5,10 @@ The decode kernels are STUBBED (image/audio libraries are not in this
 container): ``deterministic_fake_decode`` produces a seed-stable fake
 feature vector from the bytes so the Spark-side plumbing — schema,
 partitioning, UDF signature, Arrow batch shape — is real and tested.
-Swap ``_decode_image`` for a real decoder (PIL/torchvision) in
-production."""
+A real decoder (PIL/torchvision) replaces the
+``deterministic_fake_decode_u32`` call in ``extract_features``; it
+emits ``feature`` only, since the exact ``feature_u32`` lanes exist for
+the stand-in kernel alone."""
 
 from __future__ import annotations
 
@@ -58,18 +60,7 @@ def deterministic_fake_decode(payload: bytes) -> list[float]:
     return [u / 2**32 for u in deterministic_fake_decode_u32(payload)]
 
 
-def _decode_image(payload: bytes) -> list[float]:
-    """Real image decode/resize/feature stub.
-
-    Raises NotImplementedError by design: the container has no image
-    libraries.  The pipeline uses deterministic_fake_decode instead."""
-    raise NotImplementedError(
-        "image decoding requires PIL/torchvision; not available in this "
-        "container — use deterministic_fake_decode for plumbing tests"
-    )
-
-
-def extract_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     One mapInPandas pass; batch size bounded by
@@ -77,23 +68,10 @@ def extract_features(media: DataFrame, real_decode: bool = False) -> DataFrame:
     flat regardless of payload skew."""
     import pandas as pd
 
-    decode = _decode_image if real_decode else deterministic_fake_decode
-
     def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real_decode:
-                # Real kernel: feature comes from the decoder; the exact
-                # integer lanes have no decoder counterpart, so emit
-                # null rather than sha256 lanes that would break the
-                # documented invariant feature == feature_u32 / 2^32
-                # (and skip the wasted hashing pass per payload).
-                feature = [decode(p) for p in pdf["payload"]]
-                u32 = [None] * len(feature)
-            else:
-                u32 = [
-                    deterministic_fake_decode_u32(p) for p in pdf["payload"]
-                ]
-                feature = [[u / 2**32 for u in row] for row in u32]
+            u32 = [deterministic_fake_decode_u32(p) for p in pdf["payload"]]
+            feature = [[u / 2**32 for u in row] for row in u32]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

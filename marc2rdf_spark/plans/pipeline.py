@@ -24,6 +24,24 @@ def load_mapping(name: str) -> Mapping:
     return load_skeleton_mapping() if name == "skeleton" else load_dummy_mapping()
 
 
+def _convert(
+    records: DataFrame,
+    mapping: Mapping | str,
+    library: Library | None,
+    dedup: bool,
+    cache_records: bool = False,
+) -> DataFrame:
+    """Parsed records -> triples: the one convert assembly behind every
+    source (pages, binary ISO 2709)."""
+    if isinstance(mapping, str):
+        mapping = load_mapping(mapping)
+    triples = MappingCompiler(mapping, library or Library()).convert(
+        records, cache_records=cache_records
+    )
+    triples = triples.select(TRIPLE_COLS)
+    return triples.dropDuplicates(TRIPLE_COLS) if dedup else triples
+
+
 def convert_pages(
     pages: DataFrame,
     mapping: Mapping | str = "skeleton",
@@ -35,19 +53,13 @@ def convert_pages(
     """web_pages DF -> deduplicated triples DF.  ``urls_colocated``
     enables the shuffle-free in-partition LWW extract for url-bucketed
     input layouts (see extract_and_parse)."""
-    if isinstance(mapping, str):
-        mapping = load_mapping(mapping)
     # include_xml=False: straight conversion never reads the exact
     # snippet (that's the staging zone's concern), so don't pay the
     # Arrow round-trip for a full copy of every record's text
     records = extract_and_parse(
         pages, urls_colocated=urls_colocated, include_xml=False
     )
-    triples = MappingCompiler(mapping, library or Library()).convert(
-        records, cache_records=cache_records
-    )
-    triples = triples.select(TRIPLE_COLS)
-    return triples.dropDuplicates(TRIPLE_COLS) if dedup else triples
+    return _convert(records, mapping, library, dedup, cache_records)
 
 
 def synth_and_convert(
@@ -82,12 +94,7 @@ def convert_binary(
     extraction)."""
     from ..sources.binary_marc import read_binary_marc
 
-    if isinstance(mapping, str):
-        mapping = load_mapping(mapping)
-    records = read_binary_marc(spark, path)
-    triples = MappingCompiler(mapping, library or Library()).convert(records)
-    triples = triples.select(TRIPLE_COLS)
-    return triples.dropDuplicates(TRIPLE_COLS) if dedup else triples
+    return _convert(read_binary_marc(spark, path), mapping, library, dedup)
 
 
 def full_pipeline(
@@ -95,9 +102,11 @@ def full_pipeline(
     authorities: DataFrame,
     label_preds: list[str],
     threshold: float = 0.7,
+    stats: dict | None = None,
 ) -> DataFrame:
     """North-star end-to-end tail: triples -> blocked linking -> CC ->
-    canonicalize -> dedup.  The triple DF feeds three consumers
+    canonicalize -> dedup.  ``stats`` is passed to connected_components
+    (rounds, round_rows, node_ids).  The triple DF feeds three consumers
     (mention extraction, canonicalize, dedup) — localCheckpoint it once
     so (a) the conversion plan executes a single time and (b)
     downstream plans reference the materialized result instead of
@@ -115,7 +124,7 @@ def full_pipeline(
     triples = triples.localCheckpoint(eager=True)
     mentions = mention_nodes(triples, label_preds)
     links = link_mentions(mentions, authorities, threshold=threshold)
-    comps = connected_components(sameas_edges(links))
+    comps = connected_components(sameas_edges(links), stats=stats)
     return canonicalize_triples(triples, comps).dropDuplicates(TRIPLE_COLS)
 
 

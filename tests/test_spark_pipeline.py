@@ -113,27 +113,6 @@ def test_synth_determinism():
     assert a == b
 
 
-def test_three_way_parity_unrolled_vs_hybrid_vs_oracle(records_df):
-    """Three independent implementations of the mapping algebra must
-    agree exactly on the full skeleton mapping: the unrolled
-    expression-tree compiler, the production hybrid codegen compiler,
-    and the pure-Python oracle (VERDICT r1 #8 — makes unrolled.py pay
-    rent as a genuinely independent cross-check)."""
-    from marc2rdf_spark.compiler.unrolled import UnrolledMappingCompiler
-
-    mapping = load_skeleton_mapping()
-    unrolled = UnrolledMappingCompiler(mapping, Library()).convert(records_df)
-    got_unrolled = {
-        tuple(r)
-        for r in unrolled.dropDuplicates(TRIPLE_COLS)
-        .select(*TRIPLE_COLS)
-        .collect()
-    }
-    got_hybrid = _spark_triples(records_df, mapping)
-    exp = _oracle_triples(mapping)
-    assert got_unrolled == got_hybrid == exp
-
-
 def test_full_pipeline_keeps_uri_and_literal_with_same_text(spark):
     """The link tail (full_pipeline, also the tail of
     jobs/convert_job.py --link) dedups on the full triple key: the URI
@@ -159,8 +138,13 @@ def test_full_pipeline_keeps_uri_and_literal_with_same_text(spark):
               "lang string, dtype string",
     )
     authorities = spark.read.parquet(os.path.join(golden, "authorities.parquet"))
-    out = [tuple(r) for r in full_pipeline(triples, authorities, [label])
+    stats: dict = {}
+    out = [tuple(r) for r in full_pipeline(triples, authorities, [label],
+                                           stats=stats)
            .select(TRIPLE_COLS).collect()]
     same_text = sorted(t[3] for t in out if t[2] == "http://x")
     assert same_text == [False, True]
     assert len(out) == 3
+    # the CC stats out-dict passes through (bench.py reads these keys)
+    assert stats["rounds"] >= 1
+    assert stats["node_ids"]

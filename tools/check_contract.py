@@ -1,6 +1,15 @@
 """Local replica of the driver's correctness gate: run every
 __spark_entry__ query at sf0.01 side-by-side with its DuckDB oracle and
-compare row count, schema width, and order-insensitive values.
+compare row count, column names, Arrow column types and
+order-insensitive values.
+
+Both sides are fetched as Arrow tables (``toArrow()`` /
+``fetch_arrow_table()``) because the contract's correctness hash is
+computed over Arrow-typed values: two results can be value-equal in
+Python yet hash differently when their Arrow types diverge (DuckDB
+HUGEINT -> decimal128(38,0) vs Spark int64, tz-aware vs naive
+timestamps, decimal(22,2) vs decimal(38,2)).
+The column types, sorted by column name, must match exactly.
 
 Usage: python tools/check_contract.py [--ansi] [query ...]
 
@@ -51,6 +60,18 @@ def rowset(rows, colnames):
     )
 
 
+def arrow_rows(tbl):
+    """(column names, row tuples) of an Arrow table."""
+    return tbl.column_names, list(zip(*(c.to_pylist() for c in tbl.columns)))
+
+
+def sorted_types(tbl):
+    """Arrow column types in column-name order (the hash's column order)."""
+    names = [c.lower() for c in tbl.column_names]
+    return [t for _, t in sorted(zip(names, tbl.schema.types),
+                                 key=lambda nt: nt[0])]
+
+
 def main(only: list[str], ansi: bool = False) -> int:
     from marc2rdf_spark.session import get_spark
 
@@ -76,9 +97,8 @@ def main(only: list[str], ansi: bool = False) -> int:
             continue
         t0 = time.time()
         try:
-            df = fn(spark, SF_DIR)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            tbl = fn(spark, SF_DIR).toArrow()
+            cols, rows = arrow_rows(tbl)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             failures += 1
@@ -90,9 +110,8 @@ def main(only: list[str], ansi: bool = False) -> int:
                 failures += 1
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            otbl = con.execute(oracles[name]).fetch_arrow_table()
+            ocols, orows = arrow_rows(otbl)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: oracle error {e}")
             failures += 1
@@ -100,8 +119,9 @@ def main(only: list[str], ansi: bool = False) -> int:
         ok_schema = sorted(c.lower() for c in cols) == sorted(
             c.lower() for c in ocols
         )
+        ok_types = ok_schema and sorted_types(tbl) == sorted_types(otbl)
         a, b = rowset(rows, cols), rowset(orows, ocols)
-        ok = ok_schema and a == b
+        ok = ok_types and a == b
         status = "ok   " if ok else "FAIL "
         print(
             f"{status} {name}: spark={len(rows)} oracle={len(orows)} "
@@ -110,6 +130,12 @@ def main(only: list[str], ansi: bool = False) -> int:
         )
         if not ok:
             failures += 1
+            if ok_schema and not ok_types:
+                for col, st, ot in zip(sorted(c.lower() for c in cols),
+                                     sorted_types(tbl),
+                                     sorted_types(otbl)):
+                    if st != ot:
+                        print(f"   type skew {col}: spark={st} oracle={ot}")
             sa, sb = set(a), set(b)
             for r in list(sa - sb)[:3]:
                 print("   spark-only:", r)

@@ -1,841 +1,198 @@
-"""Two-cluster-size scaling evidence (north rule: throughput scaling
-efficiency >= 0.8 from N to 4N executors).
+"""N-vs-4N executor scaling bench: executors are processes.
 
-No real cluster exists in this sandbox, so cluster sizes are emulated
-the way a cluster actually scales: EXECUTORS ARE PROCESSES.  Each
-"executor" is an independent JVM running local[CORES_PER_EXEC] over its
-own shards of the identical input; the two levels differ only in
-executor count (N_LOW vs N_HIGH = 4x).  This mirrors a real N->4N
-scale-out — separate heaps, separate GC, separate memory-bandwidth
-domains — which a single fat JVM cannot (thread-scaling one JVM stalls
-on shared GC/allocation bandwidth long before the hardware does; see
-BENCH/BASELINE.md notes).
+Each executor is its own JVM at local[C], C = cpu_count // 4, pinned by
+taskset to its own C cpus, over a slice of one corpus's shards.  The
+levels run 1 and 4 executors over the SAME input (1x1 vs 4x1 on 4 cores,
+1x4 vs 4x4 on 16), so efficiency = wall_N / (4 * wall_4N).  Per level:
+ - the corpus (written once, untimed, url-colocated parquet shards) is
+   faulted into the page cache;
+ - every executor warms up on its first shard, builds its plan, and
+   waits on a go-file barrier;
+ - convert (timed): convert_pages(..., urls_colocated=True).count();
+ - untimed handoff: each executor writes its triples to parquet;
+ - link_tail (timed): full_pipeline(handed-off triples).count();
+ - a phase's wall runs from go to the last executor done; steal% is the
+   hypervisor steal share of /proc/stat jiffies in that window.
+One JSON line is printed and appended to BENCH/scaling_runs.jsonl.
 
-Protocol (same input both levels):
- - the deterministic PAGES-page corpus is materialized ONCE to a
-   shard-partitioned parquet table (untimed — the real pipeline reads
-   an Iceberg/parquet web_pages table; synthesis is a benchmark
-   artifact); each executor owns a contiguous slice of shards,
-   identical across levels;
- - each executor warms up (one real shard end-to-end + plan build for
-   its real input: JVM/codegen/Python-import/first-touch-paging/driver
-   -planning costs excluded, as on a long-lived cluster where the
-   driver plans once), then signals ready and blocks on a go-file
-   barrier;
- - on go, executors run their slice (scan -> Arrow extract/parse ->
-   compiled skeleton mapping -> in-shard dedup -> count) and report;
- - wall time = go -> last executor done; throughput = total emitted
-   triples / wall.
-
-The level pair must fit the box's PHYSICAL parallelism: this container
-advertises 32 vCPUs over ~16 effective cores (SMT), so the default pair
-is 1x4 vs 4x4 = 4 vs 16 cores — beyond that, vCPU oversubscription, not
-the pipeline, caps speedup.
-
-Usage: python tools/scaling_bench.py [--pages 40000] [--low 1 --high 4]
-       [--cores-per-exec 4]
-Writes BENCH/BASELINE.md.
+Usage: python tools/scaling_bench.py [--pages 16000] [--corpus DIR]
 """
-
-from __future__ import annotations
 
 import argparse
 import datetime as dt
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
 import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# Files whose code is on the measured path: convert (phase A), link+CC
-# (phase B) and this harness itself.  Pooling best-of walls across
-# recorded runs is only valid across runs of the SAME code — the run
-# log stores this fingerprint and the pool filters on it, so a future
-# convert-path change can never silently publish an efficiency that
-# was measured on older code (ADVICE r3).
-_MEASURED_PATH_FILES = (
-    "marc2rdf_spark/marc.py",
-    "marc2rdf_spark/session.py",
-    "marc2rdf_spark/schema.py",
-    "marc2rdf_spark/config.py",
-    "marc2rdf_spark/sources/extract.py",
-    "marc2rdf_spark/sources/synth.py",
-    "marc2rdf_spark/compiler/specs.py",
-    "marc2rdf_spark/compiler/compiler.py",
-    "marc2rdf_spark/plans/pipeline.py",
-    "marc2rdf_spark/functions/exprs.py",
-    "marc2rdf_spark/functions/textsem.py",
-    "marc2rdf_spark/operators/linking.py",
-    "marc2rdf_spark/operators/components.py",
-    # the harness itself: protocol/timing changes are code changes for
-    # pooling purposes, even though report-prose edits also reset the
-    # pool — the conservative direction
-    "tools/scaling_bench.py",
-)
-
-
-def measured_path_fingerprint() -> str:
-    """md5 over the measured-path sources (stable across repo changes
-    OFF this list, unlike the git rev).  A missing file is a hard
-    error: silently skipping a renamed/typo'd entry would let a real
-    measured-path file drift out of the fingerprint and pool stale
-    walls as 'same code' — the exact bug this guard exists to stop."""
-    import hashlib
-
-    h = hashlib.md5()
-    for rel in _MEASURED_PATH_FILES:
-        p = os.path.join(HERE, rel)
-        if not os.path.exists(p):
-            raise FileNotFoundError(
-                f"measured-path file missing: {rel} — update "
-                "_MEASURED_PATH_FILES to match the repo layout"
-            )
-        with open(p, "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:12]
-
-
-# The bench sections that define the MEASUREMENT PROTOCOL: the worker
-# program every emulated executor runs (what is timed), corpus
-# synthesis, the page-cache pre-fault, the /proc/stat steal reader and
-# the process-launch/barrier/timing harness.  Reporting, pooling and
-# prose live outside these sections — editing them must not invalidate
-# previously measured walls, while editing anything that could move a
-# wall must.
-_MEASURED_BENCH_SECTIONS = (
-    "WORKER", "write_corpus", "pretouch", "_cpu_times", "run_level",
-)
-
-
-def bench_measured_source(source: str) -> str:
-    """Concatenated source segments of the measurement-protocol
-    sections, extracted by name from this file's source via ast so the
-    extraction is reproducible against ANY historical revision of the
-    file (the backfill tool applies it to `git show rev:...` text).
-    Raises if a section is missing: silently hashing fewer sections
-    would let protocol code drift out of the fingerprint."""
-    import ast
-
-    tree = ast.parse(source)
-    segs = {}
-    for node in tree.body:
-        name = None
-        if isinstance(node, ast.FunctionDef):
-            name = node.name
-        elif (
-            isinstance(node, ast.Assign)
-            and len(node.targets) == 1
-            and isinstance(node.targets[0], ast.Name)
-        ):
-            name = node.targets[0].id
-        if name in _MEASURED_BENCH_SECTIONS:
-            segs[name] = ast.get_source_segment(source, node)
-    missing = [n for n in _MEASURED_BENCH_SECTIONS if n not in segs]
-    if missing:
-        raise RuntimeError(
-            f"measured bench sections missing from source: {missing}"
-        )
-    return "\n".join(segs[n] for n in _MEASURED_BENCH_SECTIONS)
-
-
-_PIPELINE_FILES = tuple(
-    f for f in _MEASURED_PATH_FILES if f != "tools/scaling_bench.py"
-)
-
-
-def measured_protocol_fingerprint() -> str:
-    """md5 over (a) the pipeline sources the bench executes and (b)
-    the bench's own measurement-protocol sections.  Unlike
-    measured_path_fingerprint (which conservatively hashes this whole
-    file, so a reporting-prose edit orphans every previously measured
-    wall), this fingerprint changes exactly when something that can
-    MOVE a wall changes.  Both are recorded per run; pooling filters
-    on this one.  tools/backfill_measured_fp.py recomputes it for
-    historical runs from `git show <rev>:<file>`, so pool membership
-    of an old run is independently verifiable."""
-    import hashlib
-
-    h = hashlib.md5()
-    for rel in _PIPELINE_FILES:
-        p = os.path.join(HERE, rel)
-        if not os.path.exists(p):
-            raise FileNotFoundError(
-                f"measured-path file missing: {rel} — update "
-                "_MEASURED_PATH_FILES to match the repo layout"
-            )
-        with open(p, "rb") as f:
-            h.update(f.read())
-    with open(os.path.abspath(__file__), "r") as f:
-        h.update(bench_measured_source(f.read()).encode())
-    return h.hexdigest()[:12]
+SHARDS = 8
+LEVELS = (1, 4)
+PHASES = ("convert", "link_tail")
+LABEL = "http://def.bibsys.no/xmlns/radatana/1.0#catalogueName"
 
 WORKER = r"""
 import json, os, sys, time
-sys.path.insert(0, {repo!r})
-# executor-shaped JVM: heap sized & pre-touched like a real executor
-# container (lazy first-touch paging in this VM makes on-demand heap
-# growth pathologically slow), GC/JIT pools sized to the executor's
-# cores, not the host's
-os.environ.setdefault(
-    "SPARK_GC_OPTS",
-    "-XX:+UseParallelGC -XX:ActiveProcessorCount={cores} "
-    "-Xms3g -XX:+AlwaysPreTouch",
-)
-os.environ.setdefault("SPARK_DRIVER_MEM", "3g")
+cfg = json.loads(sys.argv[1])
+sys.path.insert(0, cfg["repo"])
+os.environ["SPARK_GC_OPTS"] = (
+    "-XX:+UseParallelGC -XX:ActiveProcessorCount=%d -Xms%dm "
+    "-XX:+AlwaysPreTouch" % (cfg["cores"], cfg["heap_mb"]))
+os.environ["SPARK_DRIVER_MEM"] = "%dm" % cfg["heap_mb"]
 from pyspark.sql import functions as F
 from marc2rdf_spark.session import get_spark
-from marc2rdf_spark.plans.pipeline import convert_pages
+from marc2rdf_spark.plans.pipeline import convert_pages, full_pipeline
 
-corpus = {corpus!r}          # pre-written web_pages parquet (untimed)
-shards = {shards!r}          # this executor's partition values
-warm_shard = {warm_shard!r}
-cores = {cores}
-rundir = {rundir!r}
-wid = {wid}
-
-spark = get_spark(app_name=f"scale_exec_{{wid}}", cores=cores,
-                  # dedup-shuffle partitions sized so each fits in
-                  # memory (~80 MB at 400k pages) instead of spilling:
-                  # spill I/O contends across executors at the 4x level
-                  shuffle_partitions=cores * 16)
+spark = get_spark(app_name="scale_exec", cores=cfg["cores"],
+                  shuffle_partitions=cfg["cores"] * 16)
 spark.sparkContext.setLogLevel("ERROR")
 
-def pages_for(sh):
-    # partition pruning on the shard column -> one FileScan per plan
-    return spark.read.parquet(corpus).where(F.col("shard").isin(sh)).drop(
-        "shard"
-    )
+def timed(phase, df):
+    path = os.path.join(cfg["rundir"], phase)
+    open(f"{path}_ready_{cfg['wid']}", "w").close()
+    while not os.path.exists(f"{path}_go"):
+        time.sleep(0.05)
+    n = df.count()
+    with open(f"{path}_done_{cfg['wid']}", "w") as f:
+        json.dump(n, f)
 
-# urls_colocated: the corpus is laid out like an Iceberg bucket(url)
-# table (every url's crawls live in one file), so last-write-wins runs
-# inside the Arrow pass and the conversion phase has ZERO wide
-# dependencies — the production layout for a 100 TB corpus.
-def convert(sh):
-    return convert_pages(pages_for(sh), "skeleton", urls_colocated=True)
+def convert(shards):
+    pages = spark.read.parquet(cfg["corpus"]).where(F.col("shard").isin(shards))
+    return convert_pages(pages.drop("shard"), "skeleton", urls_colocated=True)
 
-# warm-up: absorb one-time per-process costs — JVM/codegen/Python
-# imports AND first-touch memory faulting (JVM heap growth, Arrow
-# direct buffers, Python worker heaps; this VM serializes fresh page
-# faults across processes, so a cold fleet pays a large one-time
-# penalty a long-lived cluster executor never sees).  Runs over one
-# real shard so the working set is actually touched.
-convert([warm_shard]).count()
-
-# plan build + analysis happen on the DRIVER of a real cluster, once,
-# regardless of executor count — built BEFORE the barrier; the timed
-# window below measures pure distributed execution, which is what
-# scales with cluster size.
-tri = convert(shards)
-
-open(os.path.join(rundir, f"ready_{{wid}}"), "w").close()
-go = os.path.join(rundir, "go")
-while not os.path.exists(go):
-    time.sleep(0.05)
-
-t0 = time.time()
-total = tri.count()
-dt_a = time.time() - t0
-with open(os.path.join(rundir, f"done_a_{{wid}}"), "w") as f:
-    json.dump({{"wid": wid, "triples": total, "seconds": round(dt_a, 2)}}, f)
-
-# ---- untimed handoff: persist triples for the phase-B tail ----------
-# (on a real cluster phase B reads the raw_triples table the convert
-# stage committed; writing it here between the timed windows keeps
-# each phase measuring exactly its own work)
-handoff = os.path.join(rundir, f"triples_{{wid}}")
-tri.write.mode("overwrite").parquet(handoff)
-tri = spark.read.parquet(handoff)
-open(os.path.join(rundir, f"ready_b_{{wid}}"), "w").close()
-
-# ---- phase B: link + connected components + canonicalize tail -------
-from marc2rdf_spark.operators.components import (
-    canonicalize_triples, connected_components,
-)
-from marc2rdf_spark.operators.linking import (
-    link_mentions, mention_nodes, sameas_edges,
-)
-
-auth = spark.read.parquet(
-    os.path.join({repo!r}, "fixtures", "golden", "authorities.parquet")
-)
-go_b = os.path.join(rundir, "go_b")
-while not os.path.exists(go_b):
-    time.sleep(0.05)
-
-t0 = time.time()
-mentions = mention_nodes(
-    tri, ["http://def.bibsys.no/xmlns/radatana/1.0#catalogueName"]
-)
-links = link_mentions(mentions, auth, threshold=0.7)
-comps = connected_components(sameas_edges(links))
-n_canon = canonicalize_triples(tri, comps).dropDuplicates(
-    ["subj", "pred", "obj"]
-).count()
-dt_b = time.time() - t0
-with open(os.path.join(rundir, f"done_b_{{wid}}"), "w") as f:
-    json.dump({{"wid": wid, "triples": n_canon, "seconds": round(dt_b, 2)}}, f)
+convert(cfg["shards"][:1]).count()  # warm-up
+tri = convert(cfg["shards"])
+timed("convert", tri)
+handoff = os.path.join(cfg["rundir"], "triples_%d" % cfg["wid"])
+tri.write.parquet(handoff)
+auth = os.path.join(cfg["repo"], "fixtures", "golden", "authorities.parquet")
+timed("link_tail", full_pipeline(
+    spark.read.parquet(handoff), spark.read.parquet(auth), [cfg["label"]]))
 spark.stop()
 """
 
-
-def write_corpus(pages: int, n_shards: int, path: str) -> None:
-    """One-time corpus materialization (NOT in any timed window): the
-    real pipeline reads an Iceberg/parquet web_pages table; synthesis
-    is a benchmark artifact and must not be measured."""
-    import shutil
-    import subprocess as sp
-
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return
-    shutil.rmtree(path, ignore_errors=True)
-    code = f"""
-import sys
-sys.path.insert(0, {HERE!r})
-from pyspark.sql import functions as F
+CORPUS = r"""
+import json, sys
+cfg = json.loads(sys.argv[1])
+sys.path.insert(0, cfg["repo"])
 from marc2rdf_spark.session import get_spark
 from marc2rdf_spark.sources.synth import synth_web_pages
-spark = get_spark(app_name="scale_corpus", cores=16)
-spark.sparkContext.setLogLevel("ERROR")
-block = {pages} // {n_shards}
-pages = synth_web_pages(spark, {pages}, partitions={n_shards * 2})
-pages = pages.withColumn(
-    "pid", F.monotonically_increasing_id())
-# shard by page index embedded in the url (deterministic, not by row id)
-pages = pages.withColumn(
-    "shard",
-    (F.regexp_extract("url", r"(\\d+)$", 1).cast("long") - 7000000)
-    .cast("long") / {max(pages // n_shards, 1)})
-pages = pages.withColumn(
-    "shard",
-    F.least(F.col("shard").cast("int"), F.lit({n_shards} - 1))).drop("pid")
-pages.write.mode("overwrite").partitionBy("shard").parquet({path!r})
-spark.stop()
+spark = get_spark(app_name="scale_corpus", cores=cfg["cores"])
+per = cfg["pages"] // cfg["shards"]
+for s in range(cfg["shards"]):  # gen_pages emits a url's crawls together
+    synth_web_pages(spark, per, partitions=2, start=s * per).write.parquet(
+        f"{cfg['path']}/shard={s}")
 """
-    sp.run([sys.executable, "-c", code], check=True)
 
 
-def pretouch(corpus: str) -> None:
-    """Fault the whole corpus into the page cache before the timed
-    window (VERDICT r2 #4): each executor's warm-up touches only its
-    FIRST shard, so at go-time the remaining shard files were cold —
-    and at the 4N level four processes page-faulting the same device
-    simultaneously serialize on this VM's pathologically slow
-    first-touch path, deflating exactly the level under test.  A real
-    long-lived cluster reads from distributed storage with per-node
-    caches; a sequential driver-side read is the sandbox equivalent."""
-    for root, _dirs, files in os.walk(corpus):
+def write_corpus(pages: int, path: str) -> None:
+    stamp = os.path.join(path, f"_pages_{pages}")
+    if os.path.exists(stamp):
+        return
+    shutil.rmtree(path, ignore_errors=True)
+    cfg = {"repo": HERE, "cores": os.cpu_count() or 1, "pages": pages,
+           "shards": SHARDS, "path": path}
+    subprocess.run([sys.executable, "-c", CORPUS, json.dumps(cfg)], check=True)
+    open(stamp, "w").close()
+
+
+def pretouch(path: str) -> None:
+    for root, _dirs, files in os.walk(path):
         for name in files:
             with open(os.path.join(root, name), "rb") as f:
                 while f.read(1 << 24):
                     pass
 
 
-def _cpu_times() -> tuple[int, int]:
-    """(steal, total) jiffies from /proc/stat — steal is time the
-    hypervisor ran OTHER tenants while this VM was runnable, the direct
-    measurement of neighbor contention on a shared box."""
+def cpu_times() -> tuple[int, int]:
+    """(steal, total) jiffies from /proc/stat."""
     with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    vals = [int(x) for x in parts]
-    steal = vals[7] if len(vals) > 7 else 0
-    return steal, sum(vals)
+        vals = [int(x) for x in f.readline().split()[1:]]
+    return vals[7], sum(vals)
 
 
-def run_level(
-    n_exec: int, cores: int, corpus: str, n_shards: int
-) -> dict:
-    """Run one cluster size; returns wall time + per-executor stats.
-    Worker w owns a contiguous slice of the corpus shards."""
+def run_level(n_exec: int, cores: int, heap_mb: int, corpus: str) -> dict:
     pretouch(corpus)
-    per = n_shards // n_exec
-    rundir = tempfile.mkdtemp(prefix=f"scale_{n_exec}x_")
+    rundir = tempfile.mkdtemp(prefix=f"scale_{n_exec}x{cores}_")
+    per, n_cpus = SHARDS // n_exec, os.cpu_count() or 1
     procs = []
     for wid in range(n_exec):
-        myshards = list(range(wid * per, (wid + 1) * per))
-        if wid == n_exec - 1:
-            myshards = list(range(wid * per, n_shards))
-        code = WORKER.format(
-            repo=HERE, corpus=corpus, shards=myshards,
-            warm_shard=myshards[0], cores=cores, rundir=rundir, wid=wid,
-        )
-        # pin the whole executor process tree (JVM + its Python
-        # workers) to a DISJOINT set of `cores` vCPUs — the container
-        # equivalent of a real executor's cgroup.  Without pinning,
-        # local[k] freeloads far beyond k cores (Python workers, GC and
-        # JIT threads), so the small level would be silently
-        # over-provisioned and the comparison meaningless.  Executors
-        # fill from the TOP cpu ids down: system daemons and the
-        # coordinating shell schedule onto low cpu ids, and a single
-        # straggler executor sharing cpu 0-3 skews the whole wall time.
-        n_cpus = os.cpu_count() or 32
-        hi = n_cpus - wid * cores
-        cpus = ",".join(str(c) for c in range(hi - cores, hi))
-        procs.append(
-            subprocess.Popen(
-                ["taskset", "-c", cpus, sys.executable, "-c", code],
-                stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-            )
-        )
-    # barrier: wait until every executor is warmed up and ready
-    deadline = time.time() + 600
-    while time.time() < deadline:
-        if all(
-            os.path.exists(os.path.join(rundir, f"ready_{w}"))
-            for w in range(n_exec)
-        ):
-            break
-        if any(p.poll() not in (None,) and p.returncode for p in procs):
-            raise RuntimeError("executor died during warm-up")
-        time.sleep(0.1)
-    else:
-        raise RuntimeError("warm-up barrier timeout")
+        cfg = {"repo": HERE, "corpus": corpus, "rundir": rundir, "wid": wid,
+               "shards": list(range(wid * per, (wid + 1) * per)),
+               "cores": cores, "heap_mb": heap_mb, "label": LABEL}
+        # disjoint cpu sets from the top down: the executor's JVM, Python
+        # workers, GC and JIT threads all stay on its own cores
+        cpus = range(n_cpus - (wid + 1) * cores, n_cpus - wid * cores)
+        with open(os.path.join(rundir, f"log_{wid}"), "w") as log:
+            procs.append(subprocess.Popen(
+                ["taskset", "-c", ",".join(map(str, cpus)), sys.executable,
+                 "-c", WORKER, json.dumps(cfg)], stdout=log, stderr=log))
 
-    def _await(names: list[str], timeout: float = 1800) -> None:
-        deadline2 = time.time() + timeout
-        while time.time() < deadline2:
-            if all(os.path.exists(os.path.join(rundir, n)) for n in names):
-                return
-            if any(p.poll() is not None and p.returncode for p in procs):
-                raise RuntimeError("executor died mid-run")
-            time.sleep(0.1)
-        raise RuntimeError("phase barrier timeout")
+    def await_all(name: str) -> list:
+        paths = [f"{rundir}/{name}_{w}" for w in range(n_exec)]
+        while not all(map(os.path.exists, paths)):
+            for w, p in enumerate(procs):
+                if p.poll():
+                    raise RuntimeError(f"executor exited, see {rundir}/log_{w}")
+            time.sleep(0.05)
+        return paths
 
-    # phase A: conversion
-    st0 = _cpu_times()
-    t0 = time.time()
-    open(os.path.join(rundir, "go"), "w").close()
-    _await([f"done_a_{w}" for w in range(n_exec)])
-    wall_a = time.time() - t0
-    st1 = _cpu_times()
-    steal_a = round(
-        100.0 * (st1[0] - st0[0]) / max(st1[1] - st0[1], 1), 2
-    )
-
-    # untimed handoff barrier: every executor has persisted its triples
-    _await([f"ready_b_{w}" for w in range(n_exec)])
-
-    # phase B: link + CC + canonicalize tail
-    st0 = _cpu_times()
-    t0 = time.time()
-    open(os.path.join(rundir, "go_b"), "w").close()
-    _await([f"done_b_{w}" for w in range(n_exec)])
-    wall_b = time.time() - t0
-    st1 = _cpu_times()
-    steal_b = round(
-        100.0 * (st1[0] - st0[0]) / max(st1[1] - st0[1], 1), 2
-    )
-    for p in procs:
-        p.wait(timeout=300)
-
-    results, results_b = [], []
-    for w in range(n_exec):
-        with open(os.path.join(rundir, f"done_a_{w}")) as f:
-            results.append(json.load(f))
-        with open(os.path.join(rundir, f"done_b_{w}")) as f:
-            results_b.append(json.load(f))
-    total = sum(r["triples"] for r in results)
-    total_b = sum(r["triples"] for r in results_b)
-    return {
-        "executors": n_exec, "cores_per_exec": cores,
-        "total_cores": n_exec * cores,
-        "triples": total, "wall_seconds": round(wall_a, 2),
-        "triples_per_sec": round(total / wall_a, 1),
-        "steal_pct": steal_a,
-        "linkcc_triples": total_b, "linkcc_wall_seconds": round(wall_b, 2),
-        "linkcc_triples_per_sec": round(total_b / wall_b, 1),
-        "linkcc_steal_pct": steal_b,
-        "per_executor": results,
-        "per_executor_linkcc": results_b,
-    }
+    out = {}
+    try:
+        for phase in PHASES:
+            await_all(f"{phase}_ready")
+            s0, t0 = cpu_times(), time.time()
+            open(os.path.join(rundir, f"{phase}_go"), "w").close()
+            done = await_all(f"{phase}_done")
+            wall, s1 = time.time() - t0, cpu_times()
+            steal = 100.0 * (s1[0] - s0[0]) / max(s1[1] - s0[1], 1)
+            triples = 0
+            for path in done:
+                with open(path) as f:
+                    triples += json.load(f)
+            out[phase] = {"triples": triples, "wall_s": round(wall, 2),
+                          "steal_pct": round(steal, 2)}
+    finally:  # on error too: no executor outlives the bench
+        for p in procs:
+            if len(out) < len(PHASES):
+                p.kill()
+            p.wait()
+    shutil.rmtree(rundir, ignore_errors=True)
+    return out
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--pages", type=int, default=400000)
-    ap.add_argument("--low", type=int, default=1, help="N executors")
-    ap.add_argument("--high", type=int, default=4, help="4N executors")
-    ap.add_argument("--cores-per-exec", type=int, default=4)
-    ap.add_argument("--shards", type=int, default=16)
-    ap.add_argument(
-        "--corpus", default="/tmp/scale_corpus",
-        help="pre-written web_pages parquet location",
-    )
-    ap.add_argument(
-        "--repeats", type=int, default=1,
-        help="interleaved repeats per level; medians reported (host "
-        "performance drifts; a single pair is +/-0.1 efficiency noise)",
-    )
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--pages", type=int, default=16000)
+    ap.add_argument("--corpus", default="/tmp/scale_corpus")
     args = ap.parse_args()
+    cores = max((os.cpu_count() or 1) // LEVELS[-1], 1)
+    with open("/proc/meminfo") as f:
+        mem_mb = int(f.readline().split()[1]) // 1024
+    # the 4N level's pre-touched heaps take 40% of host memory; the rest
+    # is left to Python workers, the page cache and the OS
+    heap_mb = mem_mb * 2 // (5 * LEVELS[-1])
+    write_corpus(args.pages, args.corpus)
+    runs = [run_level(n, cores, heap_mb, args.corpus) for n in LEVELS]
 
-    print("writing corpus (one-time, untimed)...", flush=True)
-    write_corpus(args.pages, args.shards, args.corpus)
-
-
-    lows, highs = [], []
-    for r in range(args.repeats):
-        lo = run_level(args.low, args.cores_per_exec, args.corpus, args.shards)
-        print(f"low[{r}] :", json.dumps(lo), flush=True)
-        hi = run_level(args.high, args.cores_per_exec, args.corpus, args.shards)
-        print(f"high[{r}]:", json.dumps(hi), flush=True)
-        lows.append(lo)
-        highs.append(hi)
-    # best-of-repeats: host noise (other tenants of this VM) only ever
-    # ADDS wall time, so the minimum wall is the cleanest estimate of
-    # each level's true cost
-    low = dict(min(lows, key=lambda x: x["wall_seconds"]))
-    high = dict(min(highs, key=lambda x: x["wall_seconds"]))
-    # phases are independent timed windows: best-of applies per phase
-    for lvl, runs in ((low, lows), (high, highs)):
-        best_b = min(runs, key=lambda x: x["linkcc_wall_seconds"])
-        for k in (
-            "linkcc_triples", "linkcc_wall_seconds", "linkcc_triples_per_sec"
-        ):
-            lvl[k] = best_b[k]
-    print("best low :", json.dumps(low))
-    print("best high:", json.dumps(high))
-
-    speedup = high["triples_per_sec"] / low["triples_per_sec"]
-    factor = args.high / args.low
-    efficiency = speedup / factor
-    speedup_b = high["linkcc_triples_per_sec"] / low["linkcc_triples_per_sec"]
-    efficiency_b = speedup_b / factor
-
-    # Noise-episode taint rule (VERDICT r4 #4): the documented bad-hour
-    # signature on this shared VM is BIMODAL 4N walls (>1.5x spread
-    # between repeats of identical work) while the 1N level stays flat
-    # (<15% spread) — 4 concurrent executors are memory-bandwidth-bound
-    # and feel a noisy neighbor 2x, one executor barely does, and steal%
-    # can read 0 throughout.  A run matching the signature is TAINTED:
-    # it is logged (with the flag) for audit but never regenerates
-    # BASELINE.md and never enters the best-of pool — publishing from
-    # inside an episode would report the host, not the pipeline.
-    def _spread(walls: list) -> float:
-        return max(walls) / max(min(walls), 1e-9)
-
-    conv_walls_low = [r["wall_seconds"] for r in lows]
-    conv_walls_high = [r["wall_seconds"] for r in highs]
-    tainted = (
-        len(conv_walls_high) >= 2
-        and _spread(conv_walls_high) > 1.5
-        and _spread(conv_walls_low) < 1.15
-    )
-    if tainted:
-        print(
-            "TAINTED: 4N walls bimodal "
-            f"(spread {_spread(conv_walls_high):.2f}x) while 1N flat "
-            f"(spread {_spread(conv_walls_low):.2f}x) — noise-episode "
-            "signature; run logged but NOT published",
-            flush=True,
-        )
-
-    # Append this run's raw walls to the run log and pool best-of
-    # across ALL same-config recorded runs: host noise only ever adds
-    # wall time, so the minimum observed wall per level across runs is
-    # the cleanest estimate of the level's true cost.  Every pooled
-    # run's raw samples and git rev stay in the log for audit.
-    runlog_path = os.path.join(HERE, "BENCH", "scaling_runs.jsonl")
-    rev = "unknown"
-    try:
-        import subprocess
-
-        rev = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"], cwd=HERE,
-            capture_output=True, text=True,
-        ).stdout.strip() or "unknown"
-    except Exception:
-        pass
-    code_fp = measured_path_fingerprint()
-    measured_fp = measured_protocol_fingerprint()
-    record = {
-        "ts": dt.datetime.now().isoformat(timespec="seconds"),
-        "git_rev": rev,
-        "code_fp": code_fp,
-        "measured_fp": measured_fp,
-        "tainted": tainted,
-        "pages": args.pages, "low": args.low, "high": args.high,
-        "cores_per_exec": args.cores_per_exec,
-        "convert_walls_low": [r["wall_seconds"] for r in lows],
-        "convert_walls_high": [r["wall_seconds"] for r in highs],
-        "linkcc_walls_low": [r["linkcc_wall_seconds"] for r in lows],
-        "linkcc_walls_high": [r["linkcc_wall_seconds"] for r in highs],
-        # hypervisor steal %% during each timed window: the direct
-        # neighbor-contention measurement for slow repeats
-        "steal_low": [r.get("steal_pct") for r in lows],
-        "steal_high": [r.get("steal_pct") for r in highs],
-        "triples_low": low["triples"],
-    }
-    os.makedirs(os.path.join(HERE, "BENCH"), exist_ok=True)
-    with open(runlog_path, "a") as f:
-        f.write(json.dumps(record) + "\n")
-    pooled, stale = [], []
-    with open(runlog_path) as f:
-        for line in f:
-            r = json.loads(line)
-            if (r["pages"], r["low"], r["high"], r["cores_per_exec"]) == (
-                args.pages, args.low, args.high, args.cores_per_exec
-            ):
-                # pool ONLY runs whose measurement could not differ
-                # from this revision's: identical pipeline sources AND
-                # identical bench measurement-protocol sections
-                # (measured_fp; backfilled for historical runs from
-                # git by tools/backfill_measured_fp.py — reporting/
-                # pooling edits to this file do not orphan real walls,
-                # anything that can move a wall does).  Tainted runs
-                # (noise-episode signature) stay out of the pool too —
-                # their walls measure the host, not the code.
-                if (
-                    r.get("measured_fp") == measured_fp
-                    and not r.get("tainted")
-                ):
-                    pooled.append(r)
-                else:
-                    stale.append(r)
-    pool_low = min(min(r["convert_walls_low"]) for r in pooled)
-    pool_high = min(min(r["convert_walls_high"]) for r in pooled)
-    pool_eff = (low["triples"] / pool_high) / (
-        low["triples"] / pool_low
-    ) / factor
-    # History table shows EVERY same-config run — pooled or not — so
-    # regenerating this report never erases measurement history; the
-    # pool column says why a run is excluded (older measured_fp /
-    # tainted noise episode) rather than hiding it.
-    def _pool_status(r):
-        if r.get("tainted"):
-            return "no (tainted)"
-        if r.get("measured_fp") != measured_fp:
-            return "no (other fp)"
-        return "yes"
-
-    runs_table = "\n".join(
-        f"| {r['ts']} | {r['git_rev']} | "
-        f"{', '.join(str(x) for x in r['convert_walls_low'])} | "
-        f"{', '.join(str(x) for x in r['convert_walls_high'])} | "
-        f"{min(r['convert_walls_low']) / min(r['convert_walls_high']) / factor:.2f} | "
-        f"{_pool_status(r)} |"
-        for r in sorted(pooled + stale, key=lambda r: r["ts"])
-    )
-
-    md = f"""# BENCH — measured baseline (this repo)
-
-Generated {dt.datetime.now().isoformat(timespec='seconds')} by
-`python tools/scaling_bench.py --pages {args.pages} --low {args.low} \
---high {args.high} --cores-per-exec {args.cores_per_exec}`.
-
-## N vs 4N executor scaling (north rule: efficiency >= 0.8)
-
-No real cluster exists in this sandbox, so cluster sizes are emulated
-the way clusters actually scale: **executors are processes** — each an
-independent JVM (`local[{args.cores_per_exec}]`, own heap/GC/memory
-bandwidth) over its own shards of the IDENTICAL deterministic input
-({args.pages} pages pre-materialized once to a shard-partitioned
-parquet table — reading the table is the real job shape; synthesis is
-a benchmark artifact and is untimed; each executor owns a contiguous
-shard slice, identical across levels).  Warm-up (JVM + codegen +
-Python imports + first-touch paging, one real shard) is outside the
-timed window, as on a long-lived cluster executor; the timed window is
-a go-file barrier -> last executor done, covering scan -> Arrow
-extract/parse -> compiled mapping -> in-shard dedup -> count.
-
-| phase | cluster size | executors x cores | wall (s) | throughput (triples/s) |
-|---|---|---|---|---|
-| convert | N  | {low['executors']} x {args.cores_per_exec} = {low['total_cores']} cores | {low['wall_seconds']} | {low['triples_per_sec']} |
-| convert | 4N | {high['executors']} x {args.cores_per_exec} = {high['total_cores']} cores | {high['wall_seconds']} | {high['triples_per_sec']} |
-| link+CC tail | N  | {low['executors']} x {args.cores_per_exec} | {low['linkcc_wall_seconds']} | {low['linkcc_triples_per_sec']} |
-| link+CC tail | 4N | {high['executors']} x {args.cores_per_exec} | {high['linkcc_wall_seconds']} | {high['linkcc_triples_per_sec']} |
-
-- convert speedup N -> 4N: **{speedup:.2f}x** (ideal {factor:.0f}x),
-  **scaling efficiency {efficiency:.2f}** (target >= 0.8) —
-  single-invocation, best-of-{args.repeats} interleaved repeats per
-  level within THIS run (host noise only ever adds wall time)
-- link+CC tail speedup N -> 4N: **{speedup_b:.2f}x**,
-  **scaling efficiency {efficiency_b:.2f}**
-- **pooled across all {len(pooled)} recorded same-config, same-code
-  runs** (BENCH/scaling_runs.jsonl — every run's raw walls + git rev;
-  pool membership = identical measurement fingerprint
-  `{measured_fp}` = md5 over the 13 pipeline sources the bench
-  executes + the bench's own measurement-protocol sections (WORKER
-  program, corpus synthesis, pretouch, steal reader, launch/timing
-  harness), so a run pools iff nothing that could move a wall
-  differs; recomputed for historical runs from `git show` by
-  `tools/backfill_measured_fp.py` and independently checkable the
-  same way.  The stricter whole-harness fingerprint is also recorded
-  per run as `code_fp` (this rev: `{code_fp}`).  {len(stale)}
-  same-config runs of OTHER measured code/protocol are in the log but
-  excluded from the pool): best N
-  wall {pool_low} s, best 4N wall {pool_high} s ->
-  **efficiency {pool_eff:.2f}**.
-  Pooling is the same best-of rule applied across invocations: on this
-  shared VM neighbor load varies by hour and only ever ADDS wall time,
-  so the minimum observed wall per level is the cleanest estimate of
-  the true cost at that cluster size.
-
-### Raw repeats (this invocation, same config)
-
-| level | convert walls (s) | steal % | link+CC walls (s) |
-|---|---|---|---|
-| N ({args.low}x{args.cores_per_exec}) | {', '.join(str(r['wall_seconds']) for r in lows)} | {', '.join(str(r.get('steal_pct')) for r in lows)} | {', '.join(str(r['linkcc_wall_seconds']) for r in lows)} |
-| 4N ({args.high}x{args.cores_per_exec}) | {', '.join(str(r['wall_seconds']) for r in highs)} | {', '.join(str(r.get('steal_pct')) for r in highs)} | {', '.join(str(r['linkcc_wall_seconds']) for r in highs)} |
-
-The corpus is faulted into the page cache before every timed level
-(`pretouch`), so no repeat differs by cold-read state.  "steal %" is
-hypervisor steal time (/proc/stat) during exactly that timed window —
-the direct measurement of neighbor-tenant contention on this shared
-box; a slow repeat with high steal is the host, not the pipeline.
-
-**Taint rule** (applied automatically): a run whose 4N convert walls
-are bimodal (>1.5x spread between repeats of identical work) while the
-1N walls stay flat (<15% spread) matches this VM's documented
-noise-episode signature — 4 concurrent executors are memory-bandwidth
-bound and feel a noisy neighbor ~2x while one executor barely does,
-and steal% can read 0 throughout.  Such a run is logged to
-scaling_runs.jsonl with `"tainted": true` but never regenerates this
-file and never enters the best-of pool; this report always comes from
-an untainted invocation.
-
-### All recorded runs of this config (pool membership marked)
-
-| run | git rev | N convert walls (s) | 4N convert walls (s) | run eff | in pool |
-|---|---|---|---|---|---|
-{runs_table}
-
-The fingerprint break between the 2026-08-18 era (pooled 0.94, best
-single invocation 1.02) and the current pool is the r5
-`py_ruby_strip` ASCII fix (commit 3f7f4dc) — an ORACLE-side Python
-twin; the compiled Spark plan is byte-identical.  The prior era's
-numbers therefore remain informative context for the same executed
-plan, but the headline conservatively pools only
-fingerprint-identical runs.
-
-### The box's own scaling ceiling (control experiment)
-
-`python tools/bandwidth_probe.py` — pure 256 MB numpy copies on the
-SAME disjoint pinned cpu sets as the bench — measures how aggregate
-memory bandwidth itself scales 4 -> 16 cores on this VM:
-**17.9 GB/s at 1x4 vs 43.3 GB/s at 4x4 = 0.61 bandwidth scaling**
-(measured 2026-08-17).  All four emulated "executors" share ONE memory
-domain here, a constraint a real 4-node scale-out does not have (each
-node brings its own channels).  Any memory-traffic-bound phase is
-therefore capped near 0.6 on this box regardless of the pipeline's
-shuffle discipline; the convert phase's measured {pool_eff:.2f} (pooled)
-exceeds the memcpy envelope because XML parsing and codegen emission
-are CPU-dense between memory passes, and cutting per-record Arrow
-traffic (record_xml pruning, in-partition LWW) is exactly what keeps
-it above that ceiling.
-
-Each executor runs the full per-shard pipeline: parquet scan ->
-in-partition last-write-wins Arrow extract/parse (the corpus is laid
-out like an Iceberg bucket(url) table, so LWW needs no shuffle — the
-production layout at 100 TB; the general groupBy(url) path remains the
-library default for arbitrary layouts) -> compiled 69-tag skeleton
-mapping -> in-shard dedup -> count; then, as a separately-timed phase,
-the blocked-linking + large-star/small-star connected-components +
-canonicalize tail.  Cross-executor global dedup is the materialize
-stage's bucket shuffle (measured separately in bench.py) and is
-identical work at both levels.
-
-## Why not thread-scaling one JVM
-
-`local[8]` vs `local[32]` inside ONE JVM measures shared-GC and
-shared-allocation-bandwidth contention, not cluster scaling: this
-workload (string/array-heavy codegen) saturates a single JVM's
-allocation pipeline near 8-16 threads regardless of cores, and G1 with
-a large heap additionally degrades under this VM's first-touch paging.
-A real N->4N scale-out multiplies heaps, GC threads and memory
-channels — exactly what process-per-executor emulation reproduces.
-Single-JVM GC choice is still tuned (ParallelGC, marc2rdf_spark/
-session.py) because the driver contract and bench run single-JVM.
-
-## What closed the round-1 gap (0.50 -> here)
-
-Round 1 measured 0.50 and attributed the loss to a ~0.67 "hardware
-ceiling" calibrated with a zero-shuffle codegen control.  Round 2
-falsified that ceiling: the real bottleneck was the in-shard dedup
-shuffle SPILLING — at `shuffle.partitions = 2x cores` each reduce
-partition held ~325 MB of triples, spilling to disk, and the spill I/O
-of four executors contends on the box's single disk/page-cache (a
-resource a real cluster multiplies per node).  Sizing the dedup
-fan-out so partitions fit comfortably in memory
-(`shuffle.partitions = 16x cores`, ~20-40 MB each — exactly the
-partition-sizing rule the 100 TB design calls for; AQE coalesces what
-is over-split) removed the spill and lifted convert efficiency PAST
-the old control number.  The remaining gap to 1.0 is run-to-run host noise
-(4x-level walls vary up to 2x across repeats on this shared VM;
-best-of-repeats reported, all raw repeats in the tool output) plus the
-shared memory domain 4 JVMs inhabit here but not on a real cluster.
-
-The conversion phase additionally runs with ZERO wide dependencies:
-the corpus is laid out like an Iceberg `bucket(url)` table, so
-last-write-wins url dedup happens inside the Arrow extract pass
-(`extract_and_parse(urls_colocated=True)`) instead of a corpus-sized
-groupBy shuffle — the production layout choice at 100 TB.
-
-The link+CC tail row is fixed-cost-dominated at this corpus size (the
-large-star/small-star loop costs a few driver-scheduled rounds
-regardless of data volume, and the fixture authority set is tiny), so
-its efficiency understates the tail's data-parallel scaling; the
-canonicalize joins + dedup that dominate its bytes scale with the same
-shuffle discipline as the convert phase.  (Round 3 also removed a
-double computation inside connected_components — its node-universe and
-initial-frontier checkpoints each re-ran the upstream linking plan —
-which cut the tail's absolute wall ~33% in the single-JVM bench.)
-
-## Optimization log (what moved the number)
-
-| change | efficiency |
-|---|---|
-| thread-scaling one JVM (local[8] vs local[32]) | 0.07-0.09 (inverse) |
-| executor processes, G1, 8g lazy heaps | 0.25 |
-| + ParallelGC + ActiveProcessorCount + pinned CPU sets | 0.30 |
-| + pre-touched executor-shaped heaps (-Xms3g) | 0.41 |
-| + whole-stage-codegen hot path (hybrid compiler) | 0.42-0.52 |
-| + shard-sized warm-up (first-touch paging amortized) | 0.525 |
-| + parquet-backed corpus (synthesis untimed, real job shape) | 0.615 |
-| r1 final (count-only phase, 2x-cores shuffle fan-out) | 0.50 |
-| + in-partition LWW extract (bucket(url) layout, no url shuffle) | 0.51 |
-| + spill-free dedup fan-out (8x-cores shuffle partitions) | 0.77 |
-| + 16x-cores fan-out (~20-40 MB reduce partitions) | 0.79-0.85 |
-| + corpus pretouch before every timed level (r3) | removes cold-read skew |
-| + record_xml pruned from the conversion Arrow exchange (r3) | 0.85 single-invocation (4N best wall 63.1 -> 59.67, 13:57 run) |
-| this invocation / pooled best-of-all-runs | {efficiency:.2f} / **{pool_eff:.2f}** |
-
-## Single-JVM steady-state reference numbers (local[32], this box)
-
-See bench.py output (BENCH_r*.json): ~54k distinct triples/s end-to-end
-at 20k pages including one-time plan build (12 s at sf0.1), ~139k raw
-triples/s warm conversion throughput.
-
-Round-3 single-JVM wins (bench.py at sf0.1, best-of-2):
-- link+CC+canonicalize 10.2 s -> **6.9 s**: `connected_components`
-  eagerly checkpointed both its node universe and its initial
-  frontier, so the expensive upstream plan (salted blocked-linking
-  join + pandas-UDF scoring) executed TWICE; materializing the raw
-  edge projection once and deriving both from it removed the repeat
-  (identical output, 645,618 rows).
-- kg_pipeline now reads a pre-materialized parquet page corpus
-  (synthesis outside the timed window — the same real-job-shape rule
-  this scaling bench applies), with file sizes kept under the 128 MB
-  read-split threshold so the bucket(url) colocation invariant
-  survives the write/read round trip.
-"""
-    os.makedirs(os.path.join(HERE, "BENCH"), exist_ok=True)
-    if tainted:
-        print(f"scaling efficiency: {efficiency:.3f} (TAINTED — "
-              "BASELINE.md NOT regenerated; see taint rule above)")
-        return
-    # Hand-maintained sections (validation snapshots, artifact
-    # pointers) live in BENCH/_appendix.md so a regeneration can
-    # never silently drop them — they are appended verbatim.
-    appendix = os.path.join(HERE, "BENCH", "_appendix.md")
-    if os.path.exists(appendix):
-        with open(appendix) as f:
-            md += "\n" + f.read()
-    with open(os.path.join(HERE, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(md)
-    print(f"scaling efficiency: {efficiency:.3f}")
-    print("wrote BENCH/BASELINE.md")
+    rev = subprocess.run(["git", "describe", "--always", "--dirty"], cwd=HERE,
+                         capture_output=True, text=True).stdout.strip()
+    record = {"ts": dt.datetime.now().isoformat(timespec="seconds"),
+              "git_rev": rev or "unknown", "pages": args.pages,
+              "executors": list(LEVELS), "cores_per_exec": cores,
+              "heap_mb": heap_mb}
+    for phase in PHASES:
+        record[phase] = rec = {k: [r[phase][k] for r in runs]
+                               for k in ("triples", "wall_s", "steal_pct")}
+        w = rec["wall_s"]
+        rec["efficiency"] = round(w[0] * LEVELS[0] / (LEVELS[-1] * w[-1]), 3)
+    line = json.dumps(record)
+    print(line)
+    with open(os.path.join(HERE, "BENCH", "scaling_runs.jsonl"), "a") as f:
+        f.write(line + "\n")
 
 
 if __name__ == "__main__":
