@@ -400,13 +400,12 @@ class MappingCompiler:
     def convert(
         self,
         records: DataFrame,
-        record_col: str = "record",
-        keep: tuple = ("url",),
         cache_records: bool = False,
     ) -> DataFrame:
         """records DF (schema.RECORDS_SCHEMA) -> triples DF.  One scan,
         one broadcast join, no shuffle; dedup is the materialize
-        stage's concern (G8, SURVEY.md §2.4).
+        stage's concern (G8, SURVEY.md §2.4).  A ``url`` column, when
+        present, is carried onto every triple.
 
         Hybrid emission: simple specs (no split/combine/relation — the
         hot path) go through the scalar whole-stage-codegen branch; the
@@ -422,11 +421,11 @@ class MappingCompiler:
         the ContextCleaner when unreachable).  Keep it OFF when
         executor memory is tight — cache spill pressure measured worse
         than the recompute on 3 GB executors."""
+        kept = ["url"] if "url" in records.columns else []
         if cache_records:
             from pyspark import StorageLevel
 
-            kept_in = [c for c in keep if c in records.columns]
-            records = records.select(*kept_in, record_col).persist(
+            records = records.select(*kept, "record").persist(
                 StorageLevel.MEMORY_AND_DISK
             )
         spark = records.sparkSession
@@ -439,8 +438,7 @@ class MappingCompiler:
         # Resetting it to EXCEPTION mid-session breaks convert()'s P3
         # semantics (documented per ADVICE r1).
         spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        kept = [c for c in keep if c in records.columns]
-        record = F.col(record_col)
+        record = F.col("record")
         field = F.col("field")
         sf_first_expr = F.map_from_entries(
             F.reverse(

@@ -35,14 +35,18 @@ def is_blank_stripped(c: Column) -> Column:
     return c.isNull() | (ruby_strip(c) == "")
 
 
+def fold_accents(c: Column) -> Column:
+    """The urlize accent map (textsem.py_replacecharacters): the
+    multi-character classes, then the single-character translate."""
+    for cls, repl in MULTI_CLASSES:
+        c = F.regexp_replace(c, f"[{cls}]", repl)
+    return F.translate(c, SINGLE_FROM, SINGLE_TO)
+
+
 def urlize(c: Column) -> Column:
     """String#urlize with mapping defaults (string_replace.rb:74-83):
     strip -> accent map -> downcase -> ' '->'_' -> drop [^-_A-Za-z0-9]."""
-    out = ruby_strip(c)
-    for cls, repl in MULTI_CLASSES:
-        out = F.regexp_replace(out, f"[{cls}]", repl)
-    out = F.translate(out, SINGLE_FROM, SINGLE_TO)
-    out = F.lower(out)
+    out = F.lower(fold_accents(ruby_strip(c)))
     out = F.regexp_replace(out, " ", "_")
     return F.regexp_replace(out, DEFAULT_URLIZE_STRIP, "")
 

@@ -20,12 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from ..functions.textsem import (
-    MULTI_CLASSES,
-    SINGLE_FROM,
-    SINGLE_TO,
-    py_replacecharacters,
-)
+from ..functions.exprs import fold_accents
+from ..functions.textsem import py_replacecharacters
 from ..vocab import RDF_TYPE
 
 
@@ -50,11 +46,9 @@ def mention_nodes(triples: DataFrame, label_preds: list[str]) -> DataFrame:
 def _norm_label(c: Column) -> Column:
     """Accent-fold (urlize char map) -> lower -> keep [a-z0-9 ]; the
     pandas scoring UDF applies the identical normalization."""
-    out = F.trim(c)
-    for cls, repl in MULTI_CLASSES:
-        out = F.regexp_replace(out, f"[{cls}]", repl)
-    out = F.translate(out, SINGLE_FROM, SINGLE_TO)
-    return F.regexp_replace(F.lower(out), r"[^a-z0-9 ]", "")
+    return F.regexp_replace(
+        F.lower(fold_accents(F.trim(c))), r"[^a-z0-9 ]", ""
+    )
 
 
 def char_shingles(c: Column, n: int = 3) -> Column:
@@ -101,7 +95,7 @@ def trigram_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     item 3).  Python only touches candidate pairs, never the corpus."""
 
     def tri(s: str) -> set:
-        s = py_replacecharacters((s or "").strip()).lower()
+        s = py_replacecharacters((s or "").strip(" ")).lower()
         s = " " + "".join(ch for ch in s if ("a" <= ch <= "z") or ("0" <= ch <= "9") or ch == " ") + " "
         return {s[i : i + 3] for i in range(max(len(s) - 2, 1))}  # noqa: E203
 

@@ -139,12 +139,6 @@ def upsert_records(
     return cleaned.select(cols).unionByName(fresh.select(cols)).dropDuplicates(cols)
 
 
-def purge_tombstones(store: DataFrame, deleted_subjects) -> DataFrame:
-    """U6: OAI-deleted records -> full purge incl. inbound edges
-    (scheduler.rb:379-383)."""
-    return purge_record(store, deleted_subjects)
-
-
 # ---------------------------------------------------------------------------
 # query patterns (J1-J3, A1, A3)
 # ---------------------------------------------------------------------------

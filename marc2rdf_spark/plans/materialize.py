@@ -23,6 +23,9 @@ identical (tests/test_resume.py)."""
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,13 +55,48 @@ def _overwrite_partitions(df: DataFrame, path: str) -> None:
     )
 
 
+def _run_stage(
+    lineage: LineageLog,
+    run_id: str,
+    stage: str,
+    source: DataFrame,
+    build: Callable[[DataFrame], DataFrame],
+    path: str,
+) -> None:
+    """Run one resumable stage over the buckets of ``source`` that have
+    no done lineage row for (run_id, stage).
+
+    ``source`` is the stage's bucketed input as scanned, so the
+    emptiness probe reads a scan, never a shuffle.  ``build`` turns the
+    pending input rows into the stage's bucketed output; it runs once,
+    inside the eager checkpoint, and its buckets are committed by
+    dynamic partition overwrite before their lineage rows are appended
+    (a bucket is done only once its data is)."""
+    done = lineage.done_buckets(run_id, stage)
+    todo = source.filter(~F.col("bucket").isin(list(done))) if done else source
+    if todo.isEmpty():
+        return
+    out = build(todo).localCheckpoint(eager=True)
+    _overwrite_partitions(out, path)
+    # input_rows: distinct source urls, for the stages that carry one
+    input_rows = (
+        F.countDistinct("url") if "url" in out.columns
+        else F.lit(None).cast("long")
+    )
+    counts = out.groupBy("bucket").agg(
+        input_rows.alias("input_rows"), F.count("*").alias("output_triples")
+    ).select(
+        F.col("bucket").alias("partition_id"), "input_rows", "output_triples"
+    )
+    lineage.append(run_id, stage, counts)
+
+
 def run_resumable(
     spark: SparkSession,
     pages: DataFrame,
     out_dir: str,
     run_id: str,
     mapping: Mapping | str = "skeleton",
-    library: Library | None = None,
     n_buckets: int = 32,
     extract_id: str | None = None,
 ) -> DataFrame:
@@ -71,7 +109,6 @@ def run_resumable(
     parquet is reused and only convert+materialize re-run."""
     if isinstance(mapping, str):
         mapping = load_mapping(mapping)
-    library = library or Library()
     extract_id = extract_id or run_id
     lineage = LineageLog(spark, f"{out_dir}/_lineage")
     # staging zone keyed BY PATH per extract_id (not just in lineage):
@@ -83,34 +120,16 @@ def run_resumable(
     final_path = f"{out_dir}/triples"
 
     # ---- stage 0: extract (raw pre-conversion staging zone, S5) --------
-    done0 = lineage.done_buckets(extract_id, EXTRACT_STAGE)
-    pages_b = _with_bucket(pages, ["url"], n_buckets)
-    todo0 = pages_b.filter(
-        ~F.col("bucket").isin(list(done0)) if done0 else F.lit(True)
+    _run_stage(
+        lineage, extract_id, EXTRACT_STAGE,
+        _with_bucket(pages, ["url"], n_buckets),
+        lambda todo: _with_bucket(
+            extract_and_parse(todo.drop("bucket")), ["url"], n_buckets
+        ),
+        records_path,
     )
-    if todo0.limit(1).count() > 0:
-        records = extract_and_parse(todo0.drop("bucket"))
-        records_b = _with_bucket(records, ["url"], n_buckets)
-        records_b = records_b.localCheckpoint(eager=True)
-        _overwrite_partitions(records_b, records_path)
-        counts0 = (
-            records_b.groupBy("bucket")
-            .agg(
-                F.countDistinct("url").alias("input_rows"),
-                F.count("*").alias("output_triples"),
-            )
-            .select(
-                F.col("bucket").alias("partition_id"),
-                "input_rows",
-                "output_triples",
-            )
-        )
-        lineage.append(extract_id, EXTRACT_STAGE, counts0)
 
     # ---- stage 1: convert (bucketed by url hash) -----------------------
-    done = lineage.done_buckets(run_id, RAW_STAGE)
-    from pyspark.errors import AnalysisException
-
     try:
         raw_records = spark.read.parquet(records_path)
     except AnalysisException as e:  # PATH_NOT_FOUND
@@ -119,57 +138,30 @@ def run_resumable(
             f"{out_dir}/raw_records/ — a replay must reference an "
             "extract_id whose extract stage ran in this out_dir"
         ) from e
-    todo = raw_records.filter(
-        ~F.col("bucket").isin(list(done)) if done else F.lit(True)
+    # cache_records: the hybrid plan's two branches would otherwise
+    # re-read the staged records twice inside the checkpoint job
+    _run_stage(
+        lineage, run_id, RAW_STAGE, raw_records,
+        lambda todo: _with_bucket(
+            MappingCompiler(mapping, Library()).convert(
+                todo.drop("bucket"), cache_records=True
+            ),
+            ["url"], n_buckets,
+        ).select(*TRIPLE_COLS, "url", "bucket"),
+        raw_path,
     )
-    if todo.limit(1).count() > 0:
-        # cache_records: the hybrid plan's two branches would otherwise
-        # re-read the staged records twice inside this checkpoint job
-        triples = MappingCompiler(mapping, library).convert(
-            todo.drop("bucket"), cache_records=True
-        )
-        triples_b = _with_bucket(triples, ["url"], n_buckets).select(
-            *TRIPLE_COLS, "url", "bucket"
-        )
-        triples_b = triples_b.localCheckpoint(eager=True)  # compute once
-        _overwrite_partitions(triples_b, raw_path)
-        counts = (
-            triples_b.groupBy("bucket")
-            .agg(
-                F.countDistinct("url").alias("input_rows"),
-                F.count("*").alias("output_triples"),
-            )
-            .select(
-                F.col("bucket").alias("partition_id"),
-                "input_rows",
-                "output_triples",
-            )
-        )
-        lineage.append(run_id, RAW_STAGE, counts)
 
     # ---- stage 2: materialize (global dedup via triple-hash buckets) ---
-    raw = spark.read.parquet(raw_path)
-    done2 = lineage.done_buckets(run_id, FINAL_STAGE)
-    deduped = (
-        _with_bucket(raw.drop("bucket"), TRIPLE_COLS, n_buckets)
-        .dropDuplicates(TRIPLE_COLS + ["bucket"])
-        .select(*TRIPLE_COLS, "bucket")
+    _run_stage(
+        lineage, run_id, FINAL_STAGE,
+        _with_bucket(
+            spark.read.parquet(raw_path).drop("bucket"), TRIPLE_COLS,
+            n_buckets,
+        ),
+        lambda todo: todo.dropDuplicates(TRIPLE_COLS + ["bucket"]).select(
+            *TRIPLE_COLS, "bucket"
+        ),
+        final_path,
     )
-    todo2 = deduped.filter(
-        ~F.col("bucket").isin(list(done2)) if done2 else F.lit(True)
-    )
-    if todo2.limit(1).count() > 0:
-        todo2 = todo2.localCheckpoint(eager=True)
-        _overwrite_partitions(todo2, final_path)
-        counts2 = (
-            todo2.groupBy("bucket")
-            .agg(F.count("*").alias("output_triples"))
-            .select(
-                F.col("bucket").alias("partition_id"),
-                F.lit(None).cast("long").alias("input_rows"),
-                "output_triples",
-            )
-        )
-        lineage.append(run_id, FINAL_STAGE, counts2)
 
     return spark.read.parquet(final_path).select(*TRIPLE_COLS)

@@ -28,25 +28,22 @@ def _convert(
     records: DataFrame,
     mapping: Mapping | str,
     library: Library | None,
-    dedup: bool,
     cache_records: bool = False,
 ) -> DataFrame:
-    """Parsed records -> triples: the one convert assembly behind every
-    source (pages, binary ISO 2709)."""
+    """Parsed records -> deduplicated triples: the one convert assembly
+    behind every source (pages, binary ISO 2709)."""
     if isinstance(mapping, str):
         mapping = load_mapping(mapping)
     triples = MappingCompiler(mapping, library or Library()).convert(
         records, cache_records=cache_records
     )
-    triples = triples.select(TRIPLE_COLS)
-    return triples.dropDuplicates(TRIPLE_COLS) if dedup else triples
+    return triples.select(TRIPLE_COLS).dropDuplicates(TRIPLE_COLS)
 
 
 def convert_pages(
     pages: DataFrame,
     mapping: Mapping | str = "skeleton",
     library: Library | None = None,
-    dedup: bool = True,
     cache_records: bool = False,
     urls_colocated: bool = False,
 ) -> DataFrame:
@@ -59,7 +56,7 @@ def convert_pages(
     records = extract_and_parse(
         pages, urls_colocated=urls_colocated, include_xml=False
     )
-    return _convert(records, mapping, library, dedup, cache_records)
+    return _convert(records, mapping, library, cache_records)
 
 
 def synth_and_convert(
@@ -67,25 +64,15 @@ def synth_and_convert(
     n_pages: int,
     mapping: Mapping | str = "skeleton",
     partitions: int | None = None,
-    dedup: bool = True,
-    cache_records: bool = False,
-    urls_colocated: bool = False,
 ) -> DataFrame:
-    # urls_colocated is valid for the synthetic corpus: gen_pages emits
-    # a url's fresh and stale crawls in the same mapInPandas batch, so
-    # every url's rows share a partition (the bucket(url) layout shape)
-    return convert_pages(
-        synth_web_pages(spark, n_pages, partitions), mapping, dedup=dedup,
-        cache_records=cache_records, urls_colocated=urls_colocated,
-    )
+    """``n_pages`` synthetic web_pages -> deduplicated triples DF."""
+    return convert_pages(synth_web_pages(spark, n_pages, partitions), mapping)
 
 
 def convert_binary(
     spark,
     path: str,
     mapping: Mapping | str = "skeleton",
-    library: Library | None = None,
-    dedup: bool = True,
 ) -> DataFrame:
     """Binary ISO 2709 corpus (S1; reference MARC::ForgivingReader CLI
     path, marc2rdf.rb:50) -> deduplicated triples DF.  Same compiled
@@ -94,7 +81,7 @@ def convert_binary(
     extraction)."""
     from ..sources.binary_marc import read_binary_marc
 
-    return _convert(read_binary_marc(spark, path), mapping, library, dedup)
+    return _convert(read_binary_marc(spark, path), mapping, None)
 
 
 def full_pipeline(

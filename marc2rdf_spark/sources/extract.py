@@ -35,14 +35,32 @@ def latest_pages(pages: DataFrame) -> DataFrame:
     )
 
 
+def _latest_per_url(batches):
+    """In-partition last write wins: one frame holding each url's latest
+    crawl (same ``(warc_ts, len(text))`` key as ``latest_pages``)."""
+    import pandas as pd
+
+    best: dict = {}  # url -> ((warc_ts, len), text)
+    for pdf in batches:
+        for url, ts, text in zip(pdf["url"], pdf["warc_ts"], pdf["text"]):
+            if text is None:
+                continue
+            key = (ts, len(text))
+            cur = best.get(url)
+            if cur is None or key > cur[0]:
+                best[url] = (key, text)
+    return pd.DataFrame(
+        {"url": list(best), "text": [text for _, text in best.values()]}
+    )
+
+
 def extract_and_parse(
     pages: DataFrame,
-    dedup_urls: bool = True,
     urls_colocated: bool = False,
     include_xml: bool = True,
 ) -> DataFrame:
     """web_pages -> (url, record_xml, record) rows, one per embedded
-    MARC record.
+    MARC record of each url's latest crawl.
 
     ``urls_colocated=True`` declares that all rows of a url live in the
     same scan partition — the Iceberg ``bucket(N, url)`` production
@@ -61,46 +79,9 @@ def extract_and_parse(
     roughly doubling the extract stage's memory traffic."""
     import pandas as pd
 
-    if urls_colocated and dedup_urls:
-
-        def worker_lww(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            best: dict = {}  # url -> (warc_ts, len, text)
-            for pdf in batches:
-                for url, ts, text in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["text"]
-                ):
-                    if text is None:
-                        continue
-                    key = (ts, len(text))
-                    cur = best.get(url)
-                    if cur is None or key > cur[0]:
-                        best[url] = (key, text)
-            if not best:
-                return  # empty scan partition: yield no batch (an
-                # empty pandas frame would carry float64 dtypes that
-                # Arrow cannot cast to the record struct)
-            urls, xmls, recs = [], [], []
-            for url, (_, text) in best.items():
-                for snippet in find_record_strings(text):
-                    rec = try_parse_record_xml(snippet)
-                    if rec is None:  # malformed snippet: skip, don't
-                        continue     # fail the whole Arrow batch
-                    urls.append(url)
-                    xmls.append(snippet if include_xml else None)
-                    recs.append(record_to_dict(rec))
-            yield pd.DataFrame(
-                {"url": urls, "record_xml": xmls, "record": recs}
-            )
-
-        return pages.select("url", "warc_ts", "text").mapInPandas(
-            worker_lww, schema=RECORDS_SCHEMA
-        )
-
-    src = latest_pages(pages) if dedup_urls else pages.select("url", "text")
-
     def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        if urls_colocated:
+            batches = [_latest_per_url(batches)]
         for pdf in batches:
             urls, xmls, recs = [], [], []
             for url, text in zip(pdf["url"], pdf["text"]):
@@ -114,8 +95,15 @@ def extract_and_parse(
                     # exact substring: byte-identical (unless pruned)
                     xmls.append(snippet if include_xml else None)
                     recs.append(record_to_dict(rec))
-            yield pd.DataFrame(
-                {"url": urls, "record_xml": xmls, "record": recs}
-            )
+            # no frame for a batch without records: an empty frame's
+            # float64 columns cannot be cast to the record struct
+            if urls:
+                yield pd.DataFrame(
+                    {"url": urls, "record_xml": xmls, "record": recs}
+                )
 
+    src = (
+        pages.select("url", "warc_ts", "text") if urls_colocated
+        else latest_pages(pages)
+    )
     return src.mapInPandas(worker, schema=RECORDS_SCHEMA)

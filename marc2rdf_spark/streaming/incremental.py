@@ -155,7 +155,7 @@ def run_available_now(
             ~tomb | F.col("text").rlike(r"(?s)<(?:\w+:)?metadata[\s>]")
         )
         if not live.isEmpty():
-            triples = convert_pages(live, mapping, library, dedup=True)
+            triples = convert_pages(live, mapping, library)
             # batch stamp: tombstones purge only triples appended in the
             # SAME OR EARLIER batch, so a record deleted in batch N and
             # legitimately re-delivered (un-deleted) in batch N+1

@@ -357,6 +357,38 @@ def test_linking_matches_exact_and_noisy(spark):
     assert "m3" not in links
 
 
+def test_scorer_normalizes_like_blocker(spark):
+    """The scoring UDF and the blocker's ``char_shingles`` must see the
+    same trigrams: the UDF's Jaccard equals the Column Jaccard over
+    ``char_shingles`` (space-only trim, accent fold, punctuation drop)."""
+    from marc2rdf_spark.operators.linking import (
+        char_shingles,
+        trigram_jaccard_udf,
+    )
+
+    pairs = spark.createDataFrame(
+        [
+            ("\t Hamsun, Knut", "Hamsun, Knut"),
+            ("Hamsun, Knut \t", "Hamsun, Knut"),
+            ("Bjørnson, Bjørnstjerne", "Bjornson, Bjornstjerne"),
+            ("Ålesund", "Aalesund"),
+            ("Café René", "Cafe Rene"),
+            ("?!.,", "..."),
+            ("K", "K."),
+        ],
+        ["a", "b"],
+    )
+    sa, sb = char_shingles(F.col("a")), char_shingles(F.col("b"))
+    column = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
+    rows = pairs.select(
+        "a", "b", trigram_jaccard_udf("a", "b").alias("udf"),
+        column.alias("column"),
+    ).collect()
+    assert [(r.a, r.b, r.udf) for r in rows] == [
+        (r.a, r.b, r.column) for r in rows
+    ]
+
+
 def test_blocking_recall_is_total(spark):
     """Pins the kg_link_entities / kg_full_pipeline oracle assumption:
     on the golden fixture, the MinHash-blocked linking join finds the

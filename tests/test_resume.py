@@ -73,6 +73,12 @@ def test_resume_after_partial_materialize(spark, tmp_path):
     redone = {r.partition_id for r in done_rows if r["count"] > 1}
     assert all(b % 2 == 0 for b in redone)
 
+    # a run on the finished directory finds every stage empty: no
+    # lineage rows appended, same triple set
+    n_lineage = LineageLog(spark, f"{out}/_lineage").read().count()
+    assert _tripleset(_run(spark, out)) == full
+    assert LineageLog(spark, f"{out}/_lineage").read().count() == n_lineage
+
 
 def test_resume_skips_converted_buckets(spark, tmp_path):
     """Stage-1 outputs survive: wiping only the final stage reuses raw

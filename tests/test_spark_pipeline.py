@@ -58,8 +58,26 @@ def test_extraction_byte_identity(spark, records_df):
 def test_extraction_colocated_lww_parity(spark):
     """urls_colocated=True (in-partition LWW for url-bucketed layouts)
     must produce exactly the shuffle path's records when urls ARE
-    co-located."""
-    pages = synth_web_pages(spark, 30, partitions=3).repartition(4, "url")
+    co-located.  One extra page holds a malformed snippet beside a
+    well-formed one: both layouts keep the good record, skip the bad."""
+    from marc2rdf_spark.marc import find_record_strings
+    from marc2rdf_spark.schema import WEB_PAGES_SCHEMA
+
+    extra = gen_page(30)
+    (good,) = find_record_strings(extra["text"])
+    bad = (  # unescaped "&": not well-formed XML
+        '<record><datafield tag="245"><subfield code="a">A & B'
+        "</subfield></datafield></record>"
+    )
+    extra["text"] += "\n" + bad
+    extra_df = spark.createDataFrame(
+        [tuple(extra[f.name] for f in WEB_PAGES_SCHEMA)], WEB_PAGES_SCHEMA
+    )
+    pages = (
+        synth_web_pages(spark, 30, partitions=3)
+        .unionByName(extra_df)
+        .repartition(4, "url")
+    )
     shuffle_path = {
         (r.url, r.record_xml)
         for r in extract_and_parse(pages).select("url", "record_xml").collect()
@@ -70,7 +88,8 @@ def test_extraction_colocated_lww_parity(spark):
         .select("url", "record_xml")
         .collect()
     }
-    assert colocated == shuffle_path and len(colocated) == 30
+    assert colocated == shuffle_path and len(colocated) == 31
+    assert {x for u, x in colocated if u == extra["url"]} == {good}
 
 
 def test_last_write_wins(spark):
