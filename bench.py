@@ -131,9 +131,7 @@ def main() -> None:
         # zero wide dependencies — the production layout at 100 TB
         # (parity-tested against the groupBy(url) path in
         # tests/test_spark_pipeline.py)
-        t = convert_pages(
-            pages, "skeleton", cache_records=True, urls_colocated=True,
-        )
+        t = convert_pages(pages, "skeleton", urls_colocated=True)
         # localCheckpoint: materialize AND break lineage, so the link/CC
         # stage below doesn't re-analyze the conversion tree per action
         t = t.localCheckpoint(eager=True)

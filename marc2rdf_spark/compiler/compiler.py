@@ -11,16 +11,12 @@ below), not with the number of rules:
     records
       -> one explode of a unified field array (rec|cf|df rows)
       -> broadcast hash join with specs on (tag, kind)   [rule match P1]
-      -> HYBRID emission, union of two branches:
-         * simple specs (no regex_split/combine/relation — the hot
-           path, 142/192 skeleton emissions): stacked scalar
-           projections (substr -> substitute -> strip -> urlize, exact
-           order rdfmodeler.rb:75-131) ending in a 0-or-1-row inline()
-           generator — fully WHOLE-STAGE-CODEGEN-eligible;
-         * complex specs: one generic array projection using
-           higher-order functions (transform/filter lambdas), which
-           Spark evaluates interpreted — per-object triple array
-           (parent + rdf:type + relation-subfield triples) -> inline().
+      -> one emission path for every spec: the object pipeline
+         (substr|split|whole -> substitute -> combine -> strip ->
+         urlize, exact order rdfmodeler.rb:49-135) as higher-order
+         functions over an array of objects, then a per-object triple
+         array (parent + rdf:type + relation-subfield triples)
+      -> inline()
 
 Why this shape at 100 TB (vs unrolling every rule into the expression
 tree, whose plan grows with the mapping): regex patterns ride in the
@@ -32,17 +28,13 @@ rows.  The one exception is regex_split: _dispatch_split is a CASE with
 one branch per distinct split pattern in the registry, and it is built
 twice (object pipeline and relation pipeline), so the plan grows
 linearly with that registry.  One scan, no shuffle before the final
-dedup.  The hot path must stay inside whole-stage codegen because
-interpreted evaluation is allocation-bound and was the measured
-multi-executor scaling bottleneck (BENCH/BASELINE.md).
+dedup.
 
-Plan-size rule for both branches: every pipeline stage references its
-predecessor exactly once.  The scalar branch gets this from stacked
-projections; the array branch from putting the per-row spec switch
-inside the element lambda.  A stage written when(on, f(prev))
-.otherwise(prev) doubles the tree per stage — exponential in the
-number of stages (tests/test_compiler_stages.py pins the analyzed
-plan size).
+Plan-size rule: every pipeline stage references its predecessor
+exactly once, by putting the per-row spec switch inside the element
+lambda.  A stage written when(on, f(prev)).otherwise(prev) doubles the
+tree per stage — exponential in the number of stages
+(tests/test_compiler_stages.py pins the analyzed plan size).
 """
 
 from __future__ import annotations
@@ -407,20 +399,10 @@ class MappingCompiler:
         stage's concern (G8, SURVEY.md §2.4).  A ``url`` column, when
         present, is carried onto every triple.
 
-        Hybrid emission: simple specs (no split/combine/relation — the
-        hot path) go through the scalar whole-stage-codegen branch; the
-        rest through the array/lambda branch (interpreted evaluator);
-        the union is the identical triple multiset.
-
-        cache_records: both union branches consume the same record
-        stream, so without materialization Spark recomputes the whole
-        upstream (including the Arrow extract/parse Python stage) once
-        per branch — measured ~25% of conversion wall time.  Enabling
-        the cache trades executor memory for that recompute (pruned to
-        the needed columns; spills to disk under pressure; dropped by
-        the ContextCleaner when unreachable).  Keep it OFF when
-        executor memory is tight — cache spill pressure measured worse
-        than the recompute on 3 GB executors."""
+        cache_records persists the input records (pruned to the needed
+        columns, memory and disk).  The plan reads its records once, so
+        the pipeline never sets it; it stays because the perfbench
+        workloads pass it."""
         kept = ["url"] if "url" in records.columns else []
         if cache_records:
             from pyspark import StorageLevel
@@ -491,117 +473,6 @@ class MappingCompiler:
             return spec[name]
 
         pred = self._predicate(field, s, sf_first)
-        simple = (
-            s("split_id").isNull() & s("combine").isNull()
-            & s("rel").isNull() & s("rel_class").isNull()
-        )
-
-        # --- scalar branch (codegen) -----------------------------------
-        # STACKED tiny projections, one per pipeline stage: each stage
-        # references its predecessor only as a cheap column attribute.
-        # A single when(stage).otherwise(prev) chain would duplicate the
-        # predecessor expression 2-3x PER STAGE (exponential textual
-        # blowup: measured ~100 regex sites / 18k generated lines for an
-        # 8-spec mapping), and the join-fused codegen method cannot be
-        # split (variable-streamed consume), overflowing janino's 64 KB
-        # method limit.  CollapseProject keeps the levels separate
-        # because each non-cheap alias is referenced more than once; the
-        # 0-or-1-element inline() array keeps the validity check inside
-        # the generator where no filter pushdown reaches.
-        carry = [*kept, "subj", "kind", "_dt", "_prefix", "_lang", "_pred"]
-        p0 = joined.where(simple & guard).select(
-            *kept, "subj", "kind",
-            spec["datatype"].alias("_dt"),
-            spec["prefix"].alias("_prefix"),
-            spec["lang"].alias("_lang"),
-            pred.alias("_pred"),
-            src.alias("_src"),
-            spec["substr_off"].alias("_sub_off"),
-            spec["substr_len"].alias("_sub_len"),
-            spec["subst_orig"].alias("_subst_orig"),
-            spec["subst_map"].alias("_subst_map"),
-            spec["strip_re"].alias("_strip_re"),
-            spec["urlize"].alias("_urlize"),
-        )
-        # substr stage (P5)
-        _src = F.col("_src")
-        off, ln = F.col("_sub_off"), F.col("_sub_len")
-        piece = _src.substr(off + F.lit(1), ln)
-        p1 = p0.select(
-            *carry, "_subst_orig", "_subst_map", "_strip_re", "_urlize",
-            F.when(
-                off.isNotNull(),
-                F.when(
-                    (F.length(_src) >= off + ln) & ~is_blank_stripped(piece),
-                    piece,
-                ),
-            ).otherwise(_src).alias("_o1"),
-        )
-        # substitute stage (P7): clean, last-match, map lookup
-        p2 = p1.select(
-            *carry, "_subst_orig", "_subst_map", "_strip_re", "_urlize",
-            "_o1",
-            F.lower(F.regexp_replace(F.col("_o1"), r"[\W]+", ""))
-            .alias("_cleaned"),
-        )
-        p3 = p2.select(
-            *carry, "_subst_orig", "_subst_map", "_strip_re", "_urlize",
-            "_o1", "_cleaned",
-            _last_match_col(F.col("_cleaned"), F.col("_subst_orig"))
-            .alias("_last"),
-        )
-        p4 = p3.select(
-            *carry, "_strip_re", "_urlize",
-            F.when(
-                F.col("_subst_orig").isNotNull(),
-                F.when(F.col("_last").isNull(), F.col("_cleaned")).otherwise(
-                    F.element_at(F.col("_subst_map"), F.col("_last"))
-                ),
-            ).otherwise(F.col("_o1")).alias("_o2"),
-        )
-        # strip stage (P9)
-        p5 = p4.select(
-            *carry, "_urlize",
-            F.when(
-                F.col("_strip_re").isNotNull(),
-                F.regexp_replace(F.col("_o2"), F.col("_strip_re"), ""),
-            ).otherwise(F.col("_o2")).alias("_o3"),
-        )
-        # urlize stage (P10)
-        p6 = p5.select(
-            *carry,
-            F.when(F.col("_urlize"), urlize(F.col("_o3")))
-            .otherwise(F.col("_o3")).alias("_o4"),
-        )
-        # per-object strip-empty guard: controlfield branch ONLY (:168)
-        _o4 = F.col("_o4")
-        pre = p6.select(
-            *kept, "subj", "_dt", "_prefix", "_lang",
-            F.when(
-                F.col("kind") == "cf",
-                F.when(~is_blank_stripped(_o4), _o4),
-            ).otherwise(_o4).alias("_o"),
-            "_pred",
-        )
-        _o, _pred, _dt = F.col("_o"), F.col("_pred"), F.col("_dt")
-        obj_full = F.concat(F.coalesce(F.col("_prefix"), F.lit("")), _o)
-        t_struct = F.struct(
-            F.col("subj").alias("subj"),
-            _pred.alias("pred"),
-            F.when(_dt == "uri", obj_full).otherwise(_o).alias("obj"),
-            F.when(_dt == "uri", is_uri(obj_full))
-            .otherwise(F.lit(False)).alias("obj_is_uri"),
-            F.when(_dt == "literal", F.col("_lang"))
-            .otherwise(_null()).cast("string").alias("lang"),
-            F.when(_dt == "integer", F.lit("xsd:integer"))
-            .when(_dt == "float", F.lit("xsd:float"))
-            .otherwise(_null()).cast("string").alias("dtype"),
-        ).cast(TRIPLE_STRUCT_DDL)
-        valid = _o.isNotNull() & _pred.isNotNull() & (_pred != "")
-        arr = F.when(valid, F.array(t_struct)).otherwise(_empty_triples())
-        simple_df = pre.select(*kept, F.inline(arr))
-
-        # --- array branch (complex specs; interpreted evaluator) -------
         # controlfield blank-object guard, switched per element so objs
         # is referenced once (see _pipeline)
         objs = F.filter(
@@ -613,8 +484,4 @@ class MappingCompiler:
         # F.inline = explode + struct-expansion in ONE generator: one
         # fewer chained select, and each chained DataFrame op on this
         # tree costs a full eager JVM analysis pass.
-        complex_df = joined.where(~simple & guard).select(
-            *kept, F.inline(triples_arr)
-        )
-
-        return simple_df.unionByName(complex_df)
+        return joined.where(guard).select(*kept, F.inline(triples_arr))

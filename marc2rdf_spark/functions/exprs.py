@@ -1,7 +1,7 @@
 """Spark Column-expression builders for the mapping micro-operators
 (SURVEY.md §2.2 P5-P12).  Everything here compiles to native Catalyst
-expressions — no Python UDFs — so the conversion stage stays inside
-whole-stage codegen (BASELINE.json input_hint: no per-row Python).
+expressions — no Python UDFs — so the conversion stage runs without a
+per-row Python worker (BASELINE.json input_hint: no per-row Python).
 
 Each builder is the JVM twin of a function in textsem.py; both sides
 share the same regex constants so semantics can't drift.
@@ -57,29 +57,6 @@ def is_uri(c: Column) -> Column:
     return c.rlike(URI_ALLOWED_RE) & c.rlike(URI_SCHEME_HOST_RE)
 
 
-def last_match(c: Column, pattern: str) -> Column:
-    """Last regex match of `pattern` in `c` (Ruby scan-loop, last wins);
-    null when no match.  Null-safe via F.get (no ANSI index errors)."""
-    matches = F.regexp_extract_all(c, F.lit(pattern), 0)
-    return F.get(matches, F.size(matches) - 1)
-
-
-def first_subfield(field: Column, code: str) -> Column:
-    """field[code]: FIRST subfield value with this code (ruby-marc
-    semantics, rdfmodeler.rb:244,286); null when absent."""
-    return F.get(
-        F.filter(field["subfields"], lambda s: s["code"] == F.lit(code)), 0
-    )["value"]
-
-
-def subfield_values(field: Column, code: str) -> Column:
-    """All values of `code` in field order (combine, rdfmodeler.rb:106-117)."""
-    return F.transform(
-        F.filter(field["subfields"], lambda s: s["code"] == F.lit(code)),
-        lambda s: s["value"],
-    )
-
-
 def split_with_captures(c: Column, pattern: str) -> Column:
     """Ruby String#split(/re/) incl. single-capture-group pieces, empties
     dropped by the caller.  Without a group: plain split.  With one group:
@@ -98,59 +75,6 @@ def split_with_captures(c: Column, pattern: str) -> Column:
 def _has_capture_group(pattern: str) -> bool:
     # a '(' that is not escaped and not a (?: …) / (?! …) style group
     return re.search(r"(?<!\\)\((?!\?)", pattern) is not None
-
-
-def generate_objects_expr(o: Column, ospec: dict, field: Column | None) -> Column:
-    """Columnar twin of generate_objects (rdfmodeler.rb:49-135): returns
-    array<string> applying substr|split|whole -> substitute -> combine ->
-    strip -> urlize in the reference's fixed order."""
-    empty = F.array().cast("array<string>")
-
-    if ospec.get("substr_offset") is not None:
-        off, ln = ospec["substr_offset"], ospec["substr_length"]
-        piece = F.substring(o, off + 1, ln)
-        arr = F.when(
-            (F.length(o) >= F.lit(off + ln)) & ~is_blank_stripped(piece),
-            F.array(piece),
-        ).otherwise(empty)
-    elif ospec.get("regex_split") is not None:
-        arr = F.filter(
-            split_with_captures(o, ospec["regex_split"]),
-            lambda x: x.isNotNull() & (x != ""),
-        )
-    else:
-        arr = F.array(o)
-
-    if ospec.get("regex_substitute") is not None:
-        rs = ospec["regex_substitute"]
-        subs_map = F.create_map(
-            *[F.lit(x) for kv in rs["subs"].items() for x in kv]
-        )
-
-        def _sub(x: Column) -> Column:
-            cleaned = F.lower(F.regexp_replace(x, r"[\W]+", ""))
-            last = last_match(cleaned, rs["orig"])
-            # no-match => cleaned passthrough (rdfmodeler.rb:96-104 quirk);
-            # matched-but-unmapped would crash the reference — drop (null,
-            # filtered below), same as the oracle.
-            return F.when(last.isNull(), cleaned).otherwise(subs_map[last])
-
-        arr = F.filter(F.transform(arr, _sub), lambda x: x.isNotNull())
-
-    if ospec.get("combine") is not None:
-        assert field is not None, "combine requires the enclosing datafield"
-        vals = F.concat(*[subfield_values(field, c) for c in ospec["combine"]])
-        combined = F.array_join(vals, ospec.get("combinestring") or "")
-        arr = F.transform(arr, lambda _: combined)
-
-    if ospec.get("regex_strip") is not None:
-        pat = ospec["regex_strip"]
-        arr = F.transform(arr, lambda x: F.regexp_replace(x, pat, ""))
-
-    if ospec.get("urlize") is not None:
-        arr = F.transform(arr, urlize)
-
-    return arr
 
 
 # ---------------------------------------------------------------------------

@@ -138,14 +138,10 @@ def run_resumable(
             f"{out_dir}/raw_records/ — a replay must reference an "
             "extract_id whose extract stage ran in this out_dir"
         ) from e
-    # cache_records: the hybrid plan's two branches would otherwise
-    # re-read the staged records twice inside the checkpoint job
     _run_stage(
         lineage, run_id, RAW_STAGE, raw_records,
         lambda todo: _with_bucket(
-            MappingCompiler(mapping, Library()).convert(
-                todo.drop("bucket"), cache_records=True
-            ),
+            MappingCompiler(mapping, Library()).convert(todo.drop("bucket")),
             ["url"], n_buckets,
         ).select(*TRIPLE_COLS, "url", "bucket"),
         raw_path,

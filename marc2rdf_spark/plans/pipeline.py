@@ -28,15 +28,12 @@ def _convert(
     records: DataFrame,
     mapping: Mapping | str,
     library: Library | None,
-    cache_records: bool = False,
 ) -> DataFrame:
     """Parsed records -> deduplicated triples: the one convert assembly
     behind every source (pages, binary ISO 2709)."""
     if isinstance(mapping, str):
         mapping = load_mapping(mapping)
-    triples = MappingCompiler(mapping, library or Library()).convert(
-        records, cache_records=cache_records
-    )
+    triples = MappingCompiler(mapping, library or Library()).convert(records)
     return triples.select(TRIPLE_COLS).dropDuplicates(TRIPLE_COLS)
 
 
@@ -44,7 +41,6 @@ def convert_pages(
     pages: DataFrame,
     mapping: Mapping | str = "skeleton",
     library: Library | None = None,
-    cache_records: bool = False,
     urls_colocated: bool = False,
 ) -> DataFrame:
     """web_pages DF -> deduplicated triples DF.  ``urls_colocated``
@@ -56,7 +52,7 @@ def convert_pages(
     records = extract_and_parse(
         pages, urls_colocated=urls_colocated, include_xml=False
     )
-    return _convert(records, mapping, library, cache_records)
+    return _convert(records, mapping, library)
 
 
 def synth_and_convert(

@@ -262,18 +262,15 @@ def read_converted(spark: SparkSession, out_path: str) -> DataFrame:
     appended triples minus tombstoned subjects (incl. inbound edges) —
     the lakehouse equivalent of the reference's immediate SPARQL DELETE
     (in Iceberg production this is a MERGE ... WHEN MATCHED THEN
-    DELETE).  Batch-stamped stores resolve tombstones in batch order
-    (see apply_tombstones_versioned); legacy un-stamped stores fall
-    back to unconditional purge."""
+    DELETE).  Tombstones always resolve in batch order (see
+    apply_tombstones_versioned); a side written before batch stamping
+    reads a NULL batch_id, so a legacy tombstone purges legacy triples
+    only."""
     from pyspark.errors import AnalysisException
 
     # mergeSchema: a mixed store (stamped + pre-batch_id legacy files)
-    # must surface batch_id whenever ANY file carries it — the default
-    # single-footer schema inference would make the versioned-vs-legacy
-    # branch below depend on which file Spark sampled.  Legacy rows
-    # read NULL batch_id and resolve as the pre-stamping era
-    # (apply_tombstones_versioned coalesces triples to -2 and
-    # tombstones to -1).
+    # must surface batch_id whenever ANY file carries it, whichever
+    # file Spark samples for the footer schema.
     triples = spark.read.option("mergeSchema", "true").parquet(out_path)
     try:
         tombs = spark.read.option("mergeSchema", "true").parquet(
@@ -281,6 +278,11 @@ def read_converted(spark: SparkSession, out_path: str) -> DataFrame:
         )
     except AnalysisException:  # no tombstones staged yet
         return triples
-    if "batch_id" in triples.columns and "batch_id" in tombs.columns:
-        return apply_tombstones_versioned(triples, tombs)
-    return apply_tombstones(triples, tombs)
+    stamped = "batch_id" in triples.columns
+    null_batch = F.lit(None).cast("long")
+    if not stamped:
+        triples = triples.withColumn("batch_id", null_batch)
+    if "batch_id" not in tombs.columns:
+        tombs = tombs.withColumn("batch_id", null_batch)
+    out = apply_tombstones_versioned(triples, tombs)
+    return out if stamped else out.drop("batch_id")

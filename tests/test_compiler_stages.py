@@ -1,5 +1,5 @@
-"""The array (higher-order-function) branch of the compiled mapping:
-its plan size and its per-row stage switches.
+"""The compiled mapping's one emission path (higher-order functions
+over an object array): its plan size and its per-row stage switches.
 
 Each pipeline stage in MappingCompiler._pipeline must reference its
 predecessor once, with the per-row spec switch inside the element
@@ -27,9 +27,10 @@ from marc2rdf_spark.schema import RECORDS_SCHEMA
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_is_uri", "lang", "dtype"]
 
-# analyzed skeleton conversion plan: 3,092 expression nodes with
-# single-reference stages, 22,310 with the doubling form
-MAX_EXPRESSION_NODES = 4000
+# analyzed skeleton conversion plan: 2,248 expression nodes with
+# single-reference stages; the doubling form grows exponentially with
+# the number of stages
+MAX_EXPRESSION_NODES = 2600
 
 
 def _expression_nodes(jplan) -> int:
@@ -64,11 +65,12 @@ def test_skeleton_plan_size_is_pinned(spark):
 
 LEXVO = "http://lexvo.org/id/iso639-3/"
 
-# Every spec below is on the array branch: it has a regex_split, a
-# combine, a relation block or a relation class.
+# Between them the specs below switch on every pipeline stage: substr,
+# regex_split, substitute, combine, strip, urlize, a relation block
+# and a relation class.
 STAGES_MAPPING = Mapping(tags={
     "008": {
-        # substr in the object position (relation class -> array branch)
+        # substr in the object position, with a relation class
         "language": {
             "predicate": "DC.language",
             "object": {"datatype": "uri", "prefix": LEXVO,

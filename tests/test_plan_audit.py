@@ -77,10 +77,14 @@ def test_minhash_banding_never_all_pairs(spark, queries):
 
 
 def test_conversion_plan_shape(spark, queries):
-    """The flagship conversion: Arrow MapInPandas extract, broadcast
-    spec join, no sort-merge or cartesian, bounded shuffle count."""
+    """The flagship conversion: one Arrow MapInPandas extract (records
+    are read once), broadcast spec join, no sort-merge or cartesian,
+    bounded shuffle count."""
     ops = _tree_ops(spark, queries["kg_convert_skeleton"](spark, SF_DIR))
     assert "MapInPandas" in ops, "record extract must be Arrow-batched"
+    # the query synthesizes its pages with a MapInPandas too: one
+    # synthesis plus one record extract
+    assert ops.count("MapInPandas") == 2, "records must be extracted once"
     assert "BroadcastHashJoin" in ops, "the spec table must broadcast"
     assert "SortMergeJoin" not in ops
     assert "CartesianProduct" not in ops

@@ -193,13 +193,17 @@ def test_legacy_unstamped_rows_purge_deterministically(spark):
     assert rows == {("s2", "o"), ("s1", "o2")}
 
 
-def test_legacy_unstamped_tombstone_still_purges(spark):
+def test_legacy_unstamped_tombstone_still_purges(spark, tmp_path):
     """Review r4 finding: a tombstone with NULL batch_id (legacy file
     in a mixed store) must still purge the legacy triples of its
     subject — coalescing only the triple side made max(batch_id) NULL
-    and the tombstone purged NOTHING, leaking the deleted record."""
+    and the tombstone purged NOTHING, leaking the deleted record.
+    read_converted applies the same rule when the tombstone files
+    carry no batch_id column at all, before and after a stamped
+    tombstone file joins them."""
     from marc2rdf_spark.streaming.incremental import (
         apply_tombstones_versioned,
+        read_converted,
     )
 
     triples = spark.createDataFrame(
@@ -216,3 +220,14 @@ def test_legacy_unstamped_tombstone_still_purges(spark):
     out = apply_tombstones_versioned(triples, tombs)
     rows = {(r.subj, r.obj) for r in out.collect()}
     assert rows == {("s1", "o2"), ("s2", "o")}
+
+    store = str(tmp_path / "store")
+    triples.write.parquet(store)
+    tombs.select("subj").write.parquet(store + "_tombstones")
+    read = {(r.subj, r.obj) for r in read_converted(spark, store).collect()}
+    assert read == rows
+    spark.createDataFrame(
+        [("s9", 4)], "subj string, batch_id long"
+    ).write.mode("append").parquet(store + "_tombstones")
+    read = {(r.subj, r.obj) for r in read_converted(spark, store).collect()}
+    assert read == rows

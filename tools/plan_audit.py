@@ -55,8 +55,8 @@ SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 # semantics at the time of pinning — see BENCH/PLANS.md for the
 # per-query justification strings published alongside.
 EXPECT: dict[str, dict] = {
-    # conversion: scan -> Arrow extract -> broadcast spec join ->
-    # stacked-projection emission -> one dedup shuffle (+AQE reads)
+    # conversion: scan -> one Arrow extract -> broadcast spec join ->
+    # one higher-order-function emission -> one dedup shuffle (+AQE reads)
     "kg_convert_skeleton": {
         "require": ["MapInPandas", "BroadcastHashJoin"],
         "forbid": ["CartesianProduct", "SortMergeJoin"],
