@@ -263,16 +263,14 @@ def _q_tombstone_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     through sparql_update.rb:90-99)."""
     from marc2rdf_spark.schema import WEB_PAGES_SCHEMA
     from marc2rdf_spark.sources.synth import gen_tombstone_page
-    from marc2rdf_spark.streaming.incremental import (
-        apply_tombstones,
-        parse_tombstones,
-    )
+    from marc2rdf_spark.operators.store import purge_record
+    from marc2rdf_spark.streaming.incremental import parse_tombstones
 
     pages = spark.createDataFrame(
         [gen_tombstone_page(0), gen_tombstone_page(5)], WEB_PAGES_SCHEMA
     )
     tombs = parse_tombstones(pages)
-    return apply_tombstones(_golden(spark), tombs).select(*TRIPLE_COLS)
+    return purge_record(_golden(spark), tombs).select(*TRIPLE_COLS)
 
 
 def _q_batch_windows(spark: SparkSession, sf_dir: str) -> DataFrame:

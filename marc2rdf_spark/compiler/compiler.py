@@ -98,10 +98,13 @@ def _first_subfield(field: Column, code: Column) -> Column:
 
 def _last_match_col(c: Column, pat: Column) -> Column:
     """Last regex match of the pattern column; null when pattern is
-    null or nothing matches (Ruby scan-loop last-wins).  element_at(-1)
+    null or nothing matches (Ruby scan-loop last-wins).  Index -1
     evaluates the regex ONCE (get(arr, size(arr)-1) would codegen the
-    extraction twice)."""
-    return F.element_at(F.regexp_extract_all(c, pat, F.lit(0)), F.lit(-1))
+    extraction twice); try_element_at, unlike element_at, gives null on
+    an empty match array under ANSI instead of raising."""
+    return F.try_element_at(
+        F.regexp_extract_all(c, pat, F.lit(0)), F.lit(-1)
+    )
 
 
 def _dispatch_split(o: Column, id_col: Column, patterns: list[str]) -> Column:
@@ -397,7 +400,9 @@ class MappingCompiler:
         """records DF (schema.RECORDS_SCHEMA) -> triples DF.  One scan,
         one broadcast join, no shuffle; dedup is the materialize
         stage's concern (G8, SURVEY.md §2.4).  A ``url`` column, when
-        present, is carried onto every triple.
+        present, is carried onto every triple.  The plan sets no session
+        conf and gives the same triples under any ANSI or
+        mapKeyDedupPolicy setting.
 
         cache_records persists the input records (pruned to the needed
         columns, memory and disk).  The plan reads its records once, so
@@ -411,26 +416,20 @@ class MappingCompiler:
                 StorageLevel.MEMORY_AND_DISK
             )
         spark = records.sparkSession
-        # first-subfield semantics via map_from_entries(reverse(...)):
-        # with LAST_WIN dedup the reversed array's last entry — the
-        # original FIRST occurrence — wins (ruby-marc field[code]).
-        # SESSION-WIDE DEPENDENCY: the policy must still be LAST_WIN
-        # when the plan's actions run; get_spark() sets it as a session
-        # default and this re-set guards sessions built elsewhere.
-        # Resetting it to EXCEPTION mid-session breaks convert()'s P3
-        # semantics (documented per ADVICE r1).
-        spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         record = F.col("record")
         field = F.col("field")
+        # first-subfield semantics (ruby-marc field[code]): keep only the
+        # first occurrence of each code, so the map keys are unique and
+        # the result does not depend on mapKeyDedupPolicy
+        subs = F.coalesce(
+            field["subfields"],
+            F.array().cast("array<struct<code:string,value:string>>"),
+        )
         sf_first_expr = F.map_from_entries(
-            F.reverse(
-                F.filter(
-                    F.coalesce(
-                        field["subfields"],
-                        F.array().cast("array<struct<code:string,value:string>>"),
-                    ),
-                    lambda sf: sf["code"].isNotNull(),
-                )
+            F.filter(
+                subs,
+                lambda sf, i: sf["code"].isNotNull()
+                & (F.array_position(subs["code"], sf["code"]) == i + 1),
             )
         )
         # records without the identifier control field cannot mint a

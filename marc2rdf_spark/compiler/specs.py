@@ -116,13 +116,7 @@ def _pipe_fields(ospec: dict, regs: Registries) -> dict:
     }
 
 
-class MappingCompileError(ValueError):
-    """A mapping rule uses a construct this compiler rejects at compile
-    time (fail-fast with the offending rule named, instead of a bare
-    assertion crash)."""
-
-
-def _cond_fields(sub: dict, regs: Registries, expand, where: str = "?") -> dict:
+def _cond_fields(sub: dict, regs: Registries, expand) -> dict:
     out = {
         "cond_kind": None, "cond_subs": None,
         "cond1_orig": None, "cond1_map": None,
@@ -226,9 +220,7 @@ def flatten_mapping(
         else:
             for code, sub in rule["subfield"].items():
                 ospec = sub["object"]
-                cond = _cond_fields(
-                    sub, regs, expand, where=f"tags[{key!r}]${code}"
-                )
+                cond = _cond_fields(sub, regs, expand)
                 pred = (
                     expand(sub["predicate"])
                     if (sub.get("predicate") and not sub.get("conditions"))

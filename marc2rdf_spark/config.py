@@ -31,23 +31,6 @@ class Library:
         "BIBO.isbn",
     )
 
-    @classmethod
-    def from_json(cls, path: str | None = None, library_id: int = 1) -> "Library":
-        path = path or os.path.join(FIXTURES_DIR, "libraries.json")
-        with open(path, encoding="utf-8") as f:
-            entries = json.load(f)
-        entry = next(e for e in entries if e["id"] == library_id)
-        res = entry["config"]["resource"]
-        return cls(
-            base=res["base"],
-            prefix=res["prefix"],
-            identifier_tag=res["identifier_tag"],
-            rdf_types=res.get("type", "BIBO.Document"),
-            preserve_on_update=tuple(
-                entry.get("oai", {}).get("preserve_on_update", [])
-            ),
-        )
-
     def mint_subject(self, record_id: str) -> str:
         """base + prefix + record[identifier_tag] (rdfmodeler.rb:14-15)."""
         return f"{self.base}{self.prefix}{record_id}"

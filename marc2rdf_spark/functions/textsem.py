@@ -159,30 +159,3 @@ def ruby_scan_last(s: str, pattern: str) -> str | None:
     for m in py_mapping_regex(pattern).finditer(s):
         last = m.group(0)
     return last
-
-
-# ---------------------------------------------------------------------------
-# N-Triples canonical escaping (sink S6; rdfmodeler.rb:313-324 via RDF.rb)
-# ---------------------------------------------------------------------------
-
-def py_nt_escape(s: str) -> str:
-    out = []
-    for ch in s:
-        o = ord(ch)
-        if ch == "\\":
-            out.append("\\\\")
-        elif ch == '"':
-            out.append('\\"')
-        elif ch == "\n":
-            out.append("\\n")
-        elif ch == "\r":
-            out.append("\\r")
-        elif ch == "\t":
-            out.append("\\t")
-        elif 0x20 <= o < 0x7F:
-            out.append(ch)
-        elif o <= 0xFFFF:
-            out.append(f"\\u{o:04X}")
-        else:
-            out.append(f"\\U{o:08X}")
-    return "".join(out)

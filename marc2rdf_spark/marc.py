@@ -395,15 +395,3 @@ def record_to_dict(rec: Record) -> dict:
             if not f.is_control
         ],
     }
-
-
-def record_from_dict(d: dict) -> Record:
-    rec = Record(leader=d.get("leader") or "")
-    for cf in d.get("controlfields") or []:
-        rec.fields.append(ControlField(cf["tag"], cf["value"]))
-    for df in d.get("datafields") or []:
-        f = DataField(df["tag"], df.get("ind1") or " ", df.get("ind2") or " ")
-        for sf in df.get("subfields") or []:
-            f.subfields.append(Subfield(sf["code"], sf["value"]))
-        rec.fields.append(f)
-    return rec

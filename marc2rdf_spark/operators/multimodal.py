@@ -85,16 +85,3 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(worker, schema=FEATURE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling plumbing: emits (media_id, frame_idx) rows
-    for a stub frame count derived from payload size — the real kernel
-    would probe container metadata."""
-    n_frames = (F.length(F.col("payload")) / F.lit(1024)).cast("long") + 1
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-        ).alias("frame_idx"),
-    )

@@ -17,7 +17,6 @@ per run) becomes the result row count recorded per rule run.
 
 from __future__ import annotations
 
-import json
 import re
 from dataclasses import dataclass, field, replace
 
@@ -43,22 +42,6 @@ class Rule:
     description: str = ""
     frequency: str = ""
     start_time: str = ""
-
-    @classmethod
-    def load_all(cls, path: str) -> list["Rule"]:
-        """rules.json CRUD store (rule.rb:13-27) — driver-side config."""
-        with open(path, encoding="utf-8") as f:
-            data = json.load(f)
-        return [
-            cls(
-                id=e["id"], name=e.get("name", ""), script=e.get("script", ""),
-                type=e.get("type", "global"), tag=e.get("tag", ""),
-                description=e.get("description", ""),
-                frequency=e.get("frequency", ""),
-                start_time=e.get("start_time", ""),
-            )
-            for e in data
-        ]
 
 
 def localize(

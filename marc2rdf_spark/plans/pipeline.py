@@ -137,31 +137,6 @@ def to_rdfxml(triples: DataFrame) -> DataFrame:
     )
 
 
-def rdfxml_document(triples: DataFrame) -> DataFrame:
-    """Full document lines (header + sorted blocks + footer) — write
-    with coalesce(1).text for a single .rdf file, or keep distributed
-    as line shards."""
-    spark = triples.sparkSession
-    header = spark.createDataFrame(
-        [
-            (0, '<?xml version="1.0" encoding="UTF-8"?>'),
-            (
-                1,
-                '<rdf:RDF xmlns:rdf='
-                '"http://www.w3.org/1999/02/22-rdf-syntax-ns#">',
-            ),
-        ],
-        ["ord", "line"],
-    )
-    blocks = to_rdfxml(triples).select(
-        F.lit(2).alias("ord"), F.col("xml").alias("line")
-    )
-    footer = spark.createDataFrame([(3, "</rdf:RDF>")], ["ord", "line"])
-    return header.unionByName(blocks).unionByName(footer).orderBy(
-        "ord", "line"
-    ).select("line")
-
-
 def to_ntriples(triples: DataFrame) -> DataFrame:
     """Materialize stage: render canonical N-Triples lines (G7).
     Statements whose subject is not a valid URI are the reference's

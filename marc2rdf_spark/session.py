@@ -3,6 +3,10 @@
 Tuned for the 100 TB design point (SURVEY.md §4): AQE on (skew-join +
 coalesce), Arrow-batched Python exchange, nested-schema pruning.  Local
 tests override parallelism via ``cores``.
+
+SQL semantics keep Spark's defaults (ANSI on, ``mapKeyDedupPolicy``
+EXCEPTION), so the library, its tests and any caller's vanilla session
+all evaluate plans the same way; no code depends on overriding them.
 """
 
 from __future__ import annotations
@@ -31,16 +35,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # Mapping semantics rely on non-failing element access; the plan
-        # uses null-safe F.get everywhere, but keep ANSI's strict-cast off
-        # for string->numeric observability metrics.
-        .config("spark.sql.ansi.enabled", "false")
-        # First-subfield semantics (P3) depend on LAST_WIN dedup in
-        # map_from_entries(reverse(subfields)) — a session-wide default
-        # here so the compiler's own re-set (compiler.py convert()) is
-        # belt-and-braces rather than a hidden mutation of someone
-        # else's session
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Throughput GC: for this allocation-heavy batch workload
         # ParallelGC measured consistently faster and thread-stable than

@@ -65,10 +65,6 @@ def parse_tombstones(pages: DataFrame, library: Library | None = None) -> DataFr
     ).distinct()
 
 
-def is_tombstone_page(text_col) -> "F.Column":
-    return text_col.rlike(TOMBSTONE_RE)
-
-
 # One OAI ListRecords <record> envelope (header + optional metadata);
 # the backreferenced close tag keeps nested <mx:record> metadata inside
 # the outer match (same contract as marc._RECORD_RE).
@@ -179,14 +175,6 @@ def run_available_now(
         .start()
         .awaitTermination()
     )
-
-
-def apply_tombstones(store: DataFrame, tombstones: DataFrame) -> DataFrame:
-    """U6: OAI 'deleted' records (scheduler.rb:379-383) -> purge subjects
-    including inbound edges."""
-    from ..operators.store import purge_record
-
-    return purge_record(store, tombstones)
 
 
 def apply_tombstones_versioned(

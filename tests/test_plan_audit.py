@@ -115,6 +115,17 @@ def test_audit_cli_parses_out_apart_from_the_query_filter():
         assert exc.value.code == 2, argv
 
 
+def test_contract_cli_rejects_unknown_arguments():
+    """An unknown option (``--ansi`` is none) or query name is a usage
+    error, not a run that checks zero queries and exits 0."""
+    from tools.check_contract import parse_args
+
+    for argv in (["--ansi"], ["no_such_query"]):
+        with pytest.raises(SystemExit) as exc:
+            parse_args(argv)
+        assert exc.value.code == 2, argv
+
+
 def test_audit_fails_when_the_filter_matches_nothing(monkeypatch, tmp_path):
     import __spark_entry__ as entrymod
     from tools.plan_audit import audit

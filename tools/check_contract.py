@@ -11,16 +11,15 @@ HUGEINT -> decimal128(38,0) vs Spark int64, tz-aware vs naive
 timestamps, decimal(22,2) vs decimal(38,2)).
 The column types, sorted by column name, must match exactly.
 
-Usage: python tools/check_contract.py [--ansi] [query ...]
+Usage: python tools/check_contract.py [query ...]
 
-``--ansi`` replicates the driver harness's session semantics (vanilla
-Spark 4.x defaults: ANSI on, mapKeyDedupPolicy EXCEPTION) instead of
-the repo's get_spark tuning — run it before shipping, since the driver
-does not apply session.py's confs.
+An unknown query name or option is a usage error (exit 2); a run that
+checks no query, or fails one, exits 1.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import sys
@@ -72,16 +71,11 @@ def sorted_types(tbl):
                                  key=lambda nt: nt[0])]
 
 
-def main(only: list[str], ansi: bool = False) -> int:
+def main(only: list[str]) -> int:
     from marc2rdf_spark.session import get_spark
 
     spark = get_spark(cores=8)
     spark.sparkContext.setLogLevel("ERROR")
-    if ansi:
-        # Driver-default SQL semantics (both confs are runtime-settable)
-        spark.conf.set("spark.sql.ansi.enabled", "true")
-        spark.conf.set("spark.sql.mapKeyDedupPolicy", "EXCEPTION")
-        print("== driver-default session semantics (ANSI on) ==")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -91,10 +85,11 @@ def main(only: list[str], ansi: bool = False) -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = 0
+    failures = checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        checked += 1
         t0 = time.time()
         try:
             tbl = fn(spark, SF_DIR).toArrow()
@@ -142,11 +137,24 @@ def main(only: list[str], ansi: bool = False) -> int:
             for r in list(sb - sa)[:3]:
                 print("   oracle-only:", r)
     spark.stop()
+    if not checked:
+        print("FAIL  no query checked")
+        return 1
     return failures
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Check the contract queries against their DuckDB "
+                    "oracles at SF_DIR.")
+    ap.add_argument("queries", nargs="*",
+                    help="check only these queries (default: all)")
+    args = ap.parse_args(argv)
+    unknown = sorted(set(args.queries) - set(entrymod.queries()))
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    return args
+
+
 if __name__ == "__main__":
-    argv = sys.argv[1:]
-    ansi = "--ansi" in argv
-    argv = [a for a in argv if a != "--ansi"]
-    sys.exit(1 if main(argv, ansi=ansi) else 0)
+    sys.exit(1 if main(parse_args().queries) else 0)
