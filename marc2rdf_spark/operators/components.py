@@ -12,25 +12,30 @@ sameAs graphs at scale:
  - small-star: orient edges (big -> small); for every node u, connect
    its smaller neighbors and u itself to m = min of them.
 
-Each operation is one partial-aggregating groupBy (min per node) plus a
-co-partitioned join (both sides hash-partitioned on the node key by the
-preceding aggregate).  The frontier is localCheckpointed every round so
-plan depth stays O(1); convergence is detected on materialized
-partitions via (count, xxhash64-sum) of the edge set — no recompute.
-
-The fused large+small-star round plan contains repeated subtrees (the
-frontier feeds both the min-aggregate and the join in each star); AQE's
-runtime exchange reuse deduplicates them — measured: 10 static
-Exchange nodes per round, 7 replaced by ReusedExchange at runtime, so
-the frontier is physically shuffled ~3x per round, not 10x.
+Each star reads its per-node minimum from a ``min(v) OVER (PARTITION BY
+u)`` window instead of joining a min-aggregate back to the edges, so a
+round's physical plan is three shuffles (the symmetric edges by u, the
+large-star output by u, the terminal distinct), two ``Window``s and no
+join.  Trade-off: AQE's skew-join handling could split a hub node's
+partition of a sort-merge join, but it cannot split a window partition
+— a hub's edges are sorted and buffered in one task (the buffer spills
+to disk past ``spark.sql.windowExec.buffer.spill.threshold``).  The
+frontier is localCheckpointed every round so plan depth stays O(1);
+convergence is detected on the materialized partitions via (count,
+bit_xor(xxhash64)) of the edge set — no recompute.
 
 At fixpoint every component is a star centred on its minimum node, so
 labels fall out of the final edge list without a propagation join."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _node_id(c: Column) -> Column:
+    """The long id a node's rounds run on."""
+    return F.xxhash64(c)
 
 
 def _orient(edges: DataFrame) -> DataFrame:
@@ -47,56 +52,55 @@ def _orient(edges: DataFrame) -> DataFrame:
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every neighbor v > u to min(N(u) + {u}).  Input edges in
-    any orientation (no self-loops); output oriented (big, small)."""
+    any orientation (no self-loops); output oriented (big, small), not
+    deduplicated: small-star's min is duplicate-insensitive and its
+    terminal distinct dedups the round."""
     sym = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    mins = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", F.col("u")).alias("m"))
-    )
-    # no trailing distinct: duplicate (v, m) pairs cost a few extra
-    # intermediate rows but small-star's min-aggregate is duplicate-
-    # insensitive and its terminal distinct dedups the round's output —
-    # dropping the dedup here removes one whole shuffle per round
-    # (measured 17%: 23.8s -> 20.0s on the 65k-chain fixture)
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
+    # m <= u < v, so no output row is a self-loop
     return (
-        sym.join(mins, "u")
+        sym.select("u", "v", m.alias("m"))
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Connect all smaller neighbors of u (and u) to their minimum.
     Input/output oriented (big, small)."""
-    mins = edges.groupBy("u").agg(F.min("v").alias("m"))
-    relink = (
-        edges.join(mins, "u")
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
+    m = F.min("v").over(Window.partitionBy("u")).alias("m")
+    relink = F.array(
+        F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+        F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
     )
-    return relink.union(mins.select("u", F.col("m").alias("v"))).distinct()
+    return (
+        edges.select("u", "v", m)
+        .select(F.inline(relink))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
 
 
 def _star_rounds(
     e: DataFrame, max_iterations: int, stats: dict | None
-) -> tuple[DataFrame, bool]:
+) -> DataFrame:
     """Alternate large/small-star on oriented (u, v) edges (any
-    orderable key type) until the edge multiset is stable.  Returns
-    (fixpoint edges, converged)."""
+    orderable key type) until the edge set is stable, and return the
+    fixpoint edges.  Raises RuntimeError when ``max_iterations`` rounds
+    pass without a fixpoint: the edges are then not stars yet, and no
+    labelling of them is the components."""
     prev = None
     converged = False
-    rounds = 0
     round_rows: list[int] = []
     for _ in range(max_iterations):
-        rounds += 1
         # eager=False fuses checkpoint materialization into the
-        # convergence-check action below: ONE Spark job per round
-        # instead of two (measured 15% of round fixed cost); later
-        # rounds and the final labeling read the persisted partitions.
+        # convergence-check action below; later rounds and the final
+        # labelling read the persisted partitions.  Measured: 5 Spark
+        # jobs per round — AQE runs the round's three shuffle stages
+        # (one job each) while building the checkpoint RDD, and the
+        # check is two more.
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         # Order-insensitive, overflow-free edge-set checksum: bit_xor of
         # 64-bit hashes never overflows, unlike sum(xxhash64) which
@@ -115,16 +119,21 @@ def _star_rounds(
 
     if stats is not None:
         stats.update(
-            rounds=rounds,
+            rounds=len(round_rows),
             final_edges=prev[0] if prev else 0,
             converged=converged,
             # per-round frontier sizes: with long node ids each row
-            # shuffles 16 payload bytes across the ~3 physical
-            # exchanges of a round, so this IS the exchange-bytes
-            # evidence (VERDICT r3 #5), not a proxy
+            # shuffles 16 payload bytes across the 3 exchanges of a
+            # round, so this IS the exchange-bytes evidence
             round_rows=round_rows,
         )
-    return e, converged
+    if not converged:
+        raise RuntimeError(
+            f"connected components did not converge in {len(round_rows)} "
+            f"rounds (last frontier: {round_rows[-1] if round_rows else 0} "
+            "edges); raise max_iterations"
+        )
+    return e
 
 
 def connected_components(
@@ -135,27 +144,30 @@ def connected_components(
     """edges(left_uri, right_uri) -> (uri, component) with component =
     min uri (lexicographic) of the component.
 
-    Pass a dict as ``stats`` to receive {"rounds": k, "final_edges": n,
-    "converged": bool, "round_rows": [...]} — the observable evidence
-    for the O(log n) round bound (each round is fixed-cost-dominated at
-    toy scale, so wall-clock alone hides the asymptotics).
+    Pass a dict as ``stats`` to receive {"node_ids": ..., "rounds": k,
+    "final_edges": n, "converged": bool, "round_rows": [...]} — the
+    observable evidence for the O(log n) round bound (each round is
+    fixed-cost-dominated at toy scale, so wall-clock alone hides the
+    asymptotics).  Raises RuntimeError if the rounds do not converge
+    within ``max_iterations``.
 
     The star rounds run on xxhash64 LONG node ids, not URI strings: a
     frontier row is 16 fixed-width bytes instead of two 40-120 byte
     strings, cutting every per-round exchange ~5x and making the min
-    aggregates single-word comparisons — the dominant lever on the
+    windows single-word comparisons — the dominant lever on the
     memory-bandwidth-bound link+CC tail (BENCH/BASELINE.md).  The hash
     order is a valid total order for the rounds; the CONTRACT label
     (lexicographic min uri per component) is restored by one final
     groupBy over the label table (O(|V|), once — not per round).
-    Hash collisions are checked against the node table and fall back
-    to the string-keyed rounds (p ~ n^2/2^64; at 10^12 nodes deploy a
+    The node table keys each id to the min and max uri hashed to it, so
+    a hash collision is exactly a row whose two differ; one falls back
+    to string-keyed rounds (p ~ n^2/2^64; at 10^12 nodes deploy a
     128-bit id instead — same plan, two hash columns)."""
-    # Materialize the input ONCE: nodes and the initial frontier below
-    # each end in an eager localCheckpoint, and without this both would
-    # recompute the full upstream plan (e.g. the salted blocked-linking
-    # join + pandas-UDF scoring feeding sameas_edges) — measured 2x the
-    # linking job, ~3 s of the 10 s link+CC bench at sf0.1.
+    # Materialize the input ONCE: the node table and the first round
+    # both read it, and without this each would recompute the full
+    # upstream plan (e.g. the salted blocked-linking join + pandas-UDF
+    # scoring feeding sameas_edges) — measured 2x the linking job,
+    # ~3 s of the 10 s link+CC bench at sf0.1.
     raw = (
         edges.select(
             F.col("left_uri").alias("src"), F.col("right_uri").alias("dst")
@@ -164,54 +176,36 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     # node universe includes self-loop-only nodes (labelled as selves)
+    uris = raw.select(F.explode(F.array("src", "dst")).alias("uri"))
     nodes = (
-        raw.select(F.col("src").alias("uri"))
-        .union(raw.select(F.col("dst").alias("uri")))
-        .distinct()
+        uris.groupBy(_node_id(F.col("uri")).alias("nid"))
+        .agg(F.min("uri").alias("uri"), F.max("uri").alias("uri_hi"))
         .localCheckpoint(eager=True)
     )
-
-    guard = nodes.agg(
-        F.count("*").alias("n"),
-        F.countDistinct(F.xxhash64("uri")).alias("n_ids"),
-    ).collect()[0]
-    use_longs = guard.n == guard.n_ids
+    use_longs = nodes.filter(F.col("uri") != F.col("uri_hi")).isEmpty()
     if stats is not None:
         stats["node_ids"] = "xxhash64" if use_longs else "uri-strings"
 
     if use_longs:
         e0 = _orient(
             raw.select(
-                F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
+                _node_id(F.col("src")).alias("src"),
+                _node_id(F.col("dst")).alias("dst"),
             )
-        ).localCheckpoint(eager=True)
+        )
     else:  # hash collision (astronomically rare): keep string keys
-        e0 = _orient(raw).localCheckpoint(eager=True)
-
-    e, converged = _star_rounds(e0, max_iterations, stats)
+        e0 = _orient(raw)
+        nodes = uris.distinct().select(F.col("uri").alias("nid"), "uri")
 
     # fixpoint edges are stars (node -> component min); roots and
-    # isolated nodes label themselves
-    star = e.select(F.col("u").alias("node"), F.col("v").alias("root"))
-    if not converged:
-        # Iteration budget exhausted before fixpoint: the edge set may
-        # not be a clean star yet, so a node can carry several candidate
-        # roots.  Collapse to the minimum so the contract (one label per
-        # uri) still holds.
-        star = star.groupBy("node").agg(F.min("root").alias("root"))
-
-    if not use_longs:
-        return nodes.join(
-            star, nodes["uri"] == star["node"], "left"
-        ).select("uri", F.coalesce("root", "uri").alias("component"))
-
-    # long-id labels -> contract labels: root hash order != uri order,
-    # so re-label every component with its lexicographic-min member uri
-    # (one groupBy + one join over the |V|-sized label table)
-    with_root = (
-        nodes.withColumn("nid", F.xxhash64("uri"))
-        .join(star, F.col("nid") == F.col("node"), "left")
-        .select("uri", F.coalesce("root", F.col("nid")).alias("root_id"))
+    # isolated nodes label themselves.  Root order is hash (or uri)
+    # order, so re-label every component with its lexicographic-min
+    # member uri (one groupBy + one join over the |V|-sized label table)
+    star = _star_rounds(e0, max_iterations, stats).select(
+        F.col("u").alias("nid"), F.col("v").alias("root")
+    )
+    with_root = nodes.join(star, "nid", "left").select(
+        "uri", F.coalesce("root", "nid").alias("root_id")
     )
     comp = with_root.groupBy("root_id").agg(F.min("uri").alias("component"))
     return with_root.join(comp, "root_id").select("uri", "component")

@@ -836,6 +836,122 @@ def test_connected_components_empty_and_self_loop(spark):
     assert [(r.uri, r.component) for r in rows] == [("a", "a")]
 
 
+def test_connected_components_raises_when_rounds_run_out(spark):
+    """A budget too small for the fixpoint must fail loudly: the edges
+    are not stars yet, and folding them to a min root leaves a 200-node
+    path with dozens of labels."""
+    from marc2rdf_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(199)],
+        "left_uri string, right_uri string",
+    )
+    st: dict = {}
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges, max_iterations=2, stats=st)
+    assert st["rounds"] == 2 and not st["converged"]
+
+
+def _union_find_labels(pairs):
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def test_connected_components_string_id_fallback(spark, monkeypatch):
+    """When two uris share a node id the rounds run on the uri strings;
+    the labels are still each component's min uri."""
+    from marc2rdf_spark.operators import components
+
+    monkeypatch.setattr(
+        components, "_node_id", lambda c: F.length(c).cast("long")
+    )
+    pairs = [("a", "bb"), ("bb", "c"), ("dd", "e"), ("fff", "fff"),
+             ("gg", "h1"), ("h1", "ii")]
+    edges = spark.createDataFrame(pairs, "left_uri string, right_uri string")
+    st: dict = {}
+    labels = {
+        r.uri: r.component
+        for r in components.connected_components(edges, stats=st).collect()
+    }
+    assert st["node_ids"] == "uri-strings"
+    assert labels == _union_find_labels(pairs)
+
+
+def test_star_round_plan_is_three_shuffles_no_join(spark):
+    """One large+small-star round is three shuffles (symmetric edges by
+    u, large-star output by u, the distinct), two windows, no join and
+    no exchange reused across subtrees."""
+    from marc2rdf_spark.operators.components import _large_star, _small_star
+    from tools.plan_audit import parse_tree_ops
+
+    e = spark.createDataFrame(
+        [(2, 1), (3, 2), (5, 1), (7, 3)], "u long, v long"
+    ).localCheckpoint()
+    df = _small_star(_large_star(e))
+    df.collect()
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    formatted = df._jdf.queryExecution().explainString(mode)
+    ops = parse_tree_ops(formatted.split("== Initial Plan ==")[0])
+    assert ops.count("Exchange") == 3, ops
+    assert ops.count("Window") == 2, ops
+    assert not [o for o in ops if "Join" in o or o == "ReusedExchange"], ops
+
+
+def _py_star_rounds(edges):
+    """Large-star / small-star on a set of oriented (u, v), u > v, edges
+    until the set is stable: (per-round edge counts, fixpoint)."""
+    def mins(pairs):
+        m: dict = {}
+        for u, v in pairs:
+            m[u] = min(m.get(u, v), v)
+        return m
+
+    e, prev, rows = set(edges), None, []
+    while True:
+        sym = e | {(v, u) for u, v in e}
+        m = mins(sym)
+        large = {(v, min(m[u], u)) for u, v in sym if v > u}
+        m = mins(large)
+        e = {(a, m[u]) for u, v in large for a in (u, v) if a != m[u]}
+        rows.append(len(e))
+        if e == prev:
+            return rows, e
+        prev = e
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_star_rounds_match_python_simulation(spark, seed):
+    import random
+
+    from marc2rdf_spark.operators.components import _orient, _star_rounds
+
+    rnd = random.Random(seed)
+    nodes = [f"n{rnd.randrange(10**6):06d}" for _ in range(60)]
+    pairs = [(nodes[i], nodes[i + 1]) for i in range(40)]
+    pairs += [(rnd.choice(nodes), rnd.choice(nodes)) for _ in range(25)]
+    raw = spark.createDataFrame(pairs, "src string, dst string")
+    st: dict = {}
+    fixpoint = _star_rounds(_orient(raw), 25, st)
+    rows, expected = _py_star_rounds(
+        {(max(a, b), min(a, b)) for a, b in pairs if a != b}
+    )
+    assert st["round_rows"] == rows
+    assert {(r.u, r.v) for r in fixpoint.collect()} == expected
+
+
 def test_decontaminate_flags_overlap(spark):
     """A training doc that is a benchmark doc verbatim must score 1.0
     and be flagged; a disjoint doc scores 0.0."""

@@ -148,3 +148,31 @@ def test_read_schema_width_counts_top_level_fields():
     # cut short by spark.sql.maxMetadataStringLength: a lower bound
     assert read_schema_width("ReadSchema: struct<a:int,b:struct<c:i...") \
         == "2+"
+
+
+def test_audit_reports_a_raising_query_and_goes_on(
+    spark, queries, monkeypatch, tmp_path, capsys
+):
+    """A query whose callable raises gets a FAIL row; the other audited
+    queries still get theirs, the report is written and the exit is 1."""
+    import __spark_entry__ as entrymod
+    from tools.plan_audit import audit
+
+    def broken(spark, sf_dir):
+        raise FileNotFoundError("no fixture here")
+
+    monkeypatch.setattr(
+        entrymod, "queries", lambda: {**queries, "docs_mix_sample": broken}
+    )
+    out = tmp_path / "PLANS.md"
+    names = ["docs_mix_sample", "docs_source_filter", "events_last_write_wins"]
+    assert audit(names, str(out)) == 1
+    lines = capsys.readouterr().out.splitlines()
+    assert any(ln.startswith("docs_mix_sample") and
+               "FAIL: FileNotFoundError: no fixture here" in ln
+               for ln in lines), lines
+    for name in names[1:]:
+        assert any(ln.startswith(name) and ln.endswith(" ok")
+                   for ln in lines), (name, lines)
+    report = out.read_text()
+    assert "| docs_mix_sample |" in report and "FileNotFoundError" in report

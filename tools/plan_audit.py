@@ -27,12 +27,16 @@ Streaming queries (docs_streaming_dedup, events_windowed_counts) and
 iterative/fixpoint ones (kg_connected_components, kg_full_pipeline,
 kg_resume_replay) are excluded: their queries() callables execute work
 eagerly (micro-batches, fixpoint rounds), so a pre-execution explain
-here would either run the job or describe only one round.  Their plan
-stories are told in BENCH/CC_TAIL.md and the operator docstrings.
+here would either run the job or describe only one round.  The CC
+round's executed plan (three shuffles, two windows, no join) is pinned
+by tests/test_operators.py::test_star_round_plan_is_three_shuffles_no_join;
+the others' plan stories are told in the operator docstrings.
 
 Usage: python tools/plan_audit.py [--out BENCH/PLANS.md] [query ...]
-Exit code 1 if any pinned expectation fails or no audited query is
-left to run; exit code 2 (usage error) for a query name that is not
+A query whose callable or explain raises gets a FAIL row with the
+exception and the audit goes on.  Exit code 1 if any pinned
+expectation fails, any query raises or no audited query is left to
+run; exit code 2 (usage error) for a query name that is not
 audited.
 """
 
@@ -42,6 +46,7 @@ import argparse
 import os
 import re
 import sys
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -425,8 +430,21 @@ def audit(only: list[str], out_path: str) -> int:
     rows, failures = [], []
     for name in names:
         exp = EXPECT[name]
-        df = qs[name](spark, SF_DIR)
-        formatted = df._jdf.queryExecution().explainString(fmt)
+        try:
+            df = qs[name](spark, SF_DIR)
+            formatted = df._jdf.queryExecution().explainString(fmt)
+        except Exception as exc:  # one broken query must not end the audit
+            traceback.print_exc()
+            msg = (str(exc).strip().splitlines() or [""])[0]
+            err = f"{type(exc).__name__}: {msg}"
+            rows.append({
+                "name": name, "shuffles": "?", "budget": exp["max_shuffles"],
+                "joins": [], "scans": [], "why": exp["why"],
+                "problems": [err],
+            })
+            print(f"{name:34s} FAIL: {err}")
+            failures.append(name)
+            continue
         ops = parse_tree_ops(formatted)
         shuffles = sum(1 for o in ops if o == "Exchange")
         probs = []
@@ -487,8 +505,10 @@ def audit(only: list[str], out_path: str) -> int:
             "docs_streaming_dedup, events_windowed_counts, "
             "events_percentiles_approx, multimodal_features, and "
             "ann_lsh_topk (vectorized bucketing builds literal plans "
-            "past the crossover).  See BENCH/CC_TAIL.md for the CC "
-            "fixpoint's measured per-round exchange audit.\n"
+            "past the crossover).  The CC round's executed plan "
+            "(3 shuffles, 2 windows, no join) is pinned by "
+            "tests/test_operators.py::"
+            "test_star_round_plan_is_three_shuffles_no_join.\n"
         )
     print(f"\nwrote {out_path}; {len(failures)} failure(s)")
     return 1 if failures else 0
