@@ -1001,12 +1001,14 @@ def _norm_label_sql(col: str) -> str:
 
 def _label_trigram_cte(src: str, id_col: str, label_col: str) -> str:
     """CTE body: (id, tg) — distinct char trigrams of the space-padded
-    normalized label."""
+    normalized label; like linking.blocked, a label that normalizes to
+    no [a-z0-9] has no row."""
     norm = _norm_label_sql(label_col)
     return (
         f"SELECT {id_col}, list_distinct([substr(p, i, 3) "
         "FOR i IN generate_series(1, greatest(len(p) - 3, 0) + 1)]) AS tg "
-        f"FROM (SELECT {id_col}, ' ' || {norm} || ' ' AS p FROM {src})"
+        f"FROM (SELECT {id_col}, ' ' || {norm} || ' ' AS p FROM {src}) "
+        "WHERE regexp_matches(p, '[a-z0-9]')"
     )
 
 

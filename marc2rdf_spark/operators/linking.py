@@ -4,11 +4,15 @@ SURVEY.md G5) against an authority DataFrame via MinHash/Jaccard
 blocking + vectorized similarity scoring.
 
 Shuffle discipline at 100 TB:
- - candidates come ONLY from the blocking equi-join (never a cross
-   join); block keys are character-shingle MinHash bands;
+ - candidates come ONLY from the blocking equi-join on (block, salt)
+   (never a cross join); block keys are character-shingle MinHash bands
+   (BANDS x ROWS);
  - skewed keys (popular dc:creator / dc:subject authorities) are
-   SALTED: hot blocks are split into SALT_FACTOR sub-blocks on the big
-   side and replicated on the small side, bounding any single reducer;
+   SALTED with bounded replication: one broadcast table lists the hot
+   blocks (>= HOT_BLOCK_MIN mentions) with their salt count.  A hot
+   mention takes one of SALT_FACTOR salts, and only the small
+   authority side is replicated, once per salt and only in hot blocks;
+   every other row has salt 0 on both sides;
  - final scoring is an Arrow-vectorized pandas UDF (Jaccard on
    character trigrams) over candidate pairs only.
 """
@@ -22,24 +26,19 @@ from pyspark.sql.types import DoubleType
 
 from ..functions.exprs import fold_accents
 from ..functions.textsem import py_replacecharacters
-from ..vocab import RDF_TYPE
+
+BANDS, ROWS = 8, 4  # MinHash bands per label, hashes per band
+HOT_BLOCK_MIN = 1000  # mentions in one block that make it hot
+SALT_FACTOR = 8  # sub-blocks per hot block
 
 
 def mention_nodes(triples: DataFrame, label_preds: list[str]) -> DataFrame:
-    """Extract linkable mentions from the triple stream: relation-block
-    nodes with their type and best label (G5 output)."""
-    labels = (
+    """Extract linkable mentions from the triple stream: (mention_uri,
+    label), the least label of every subject that has one (G5 output)."""
+    return (
         triples.filter(F.col("pred").isin(label_preds))
-        .groupBy("subj")
+        .groupBy(F.col("subj").alias("mention_uri"))
         .agg(F.min("obj").alias("label"))
-    )
-    types = (
-        triples.filter(F.col("pred") == RDF_TYPE)
-        .groupBy("subj")
-        .agg(F.min("obj").alias("kind"))
-    )
-    return labels.join(types, "subj", "left").select(
-        F.col("subj").alias("mention_uri"), "label", "kind"
     )
 
 
@@ -60,27 +59,28 @@ def char_shingles(c: Column, n: int = 3) -> Column:
     )
 
 
-def blocked(df: DataFrame, id_col: str, label_col: str,
-            bands: int = 8, rows: int = 4) -> DataFrame:
+def blocked(df: DataFrame, id_col: str, label_col: str) -> DataFrame:
     """(id, label, block) rows: MinHash-band block keys over character
-    trigrams.  One explode pass hashes each shingle once; the band
-    minima are MIN aggregates (map-side partial) — never re-inline the
-    shingle pipeline per seed."""
-    sh = df.select(
+    trigrams.  A label that normalizes to no [a-z0-9] has no block (it
+    would share the blank trigram, and a Jaccard of 1.0, with every
+    other such label).  One explode pass hashes each shingle once; the
+    band minima are MIN aggregates (map-side partial) — never re-inline
+    the shingle pipeline per seed."""
+    sh = df.filter(_norm_label(F.col(label_col)).rlike("[a-z0-9]")).select(
         F.col(id_col), F.col(label_col),
         F.explode(char_shingles(F.col(label_col))).alias("s"),
     )
     aggs = [
         F.min(F.xxhash64("s", F.lit(seed))).alias(f"mh{seed}")
-        for seed in range(bands * rows)
+        for seed in range(BANDS * ROWS)
     ]
     sig = sh.groupBy(id_col, label_col).agg(*aggs)
     band_arr = F.array(
         *[
             F.hash(
-                F.array(*[F.col(f"mh{b * rows + r}") for r in range(rows)])
+                F.array(*[F.col(f"mh{b * ROWS + r}") for r in range(ROWS)])
             )
-            for b in range(bands)
+            for b in range(BANDS)
         ]
     )
     return sig.select(
@@ -109,54 +109,42 @@ def trigram_jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 def link_mentions(
-    mentions: DataFrame,
-    authorities: DataFrame,
-    threshold: float = 0.7,
-    bands: int = 8,
-    salt_factor: int = 8,
-    hot_block_min: int = 1000,
+    mentions: DataFrame, authorities: DataFrame, threshold: float = 0.7
 ) -> DataFrame:
     """Blocked linking join:
-    mentions(mention_uri, label) x authorities(auth_id, label[, kind])
+    mentions(mention_uri, label) x authorities(auth_id, label)
     -> (mention_uri, auth_id, score) best match per mention.
 
-    Hot blocks (> hot_block_min mentions — popular authorities) are
-    salted: mention side gets a deterministic salt in [0, salt_factor),
-    authority side is replicated across salts, so no reducer sees a
-    whole hot block."""
+    Each side is blocked once and left-joins one broadcast table of hot
+    blocks (>= HOT_BLOCK_MIN mentions — popular authorities) and their
+    salt count.  A mention takes salt xxhash64(uri) mod salts, an
+    authority is replicated into salts 0..salts-1; a cold block has
+    one salt, so no reducer sees a whole hot block and cold rows are
+    never copied."""
     m = blocked(
-        mentions.select("mention_uri", "label"), "mention_uri", "label",
-        bands,
+        mentions.select("mention_uri", "label"), "mention_uri", "label"
     ).withColumnRenamed("label", "m_label")
     a = blocked(
-        authorities.select("auth_id", "label"), "auth_id", "label", bands
+        authorities.select("auth_id", "label"), "auth_id", "label"
     ).withColumnRenamed("label", "a_label")
 
-    # --- skew handling: find hot blocks, salt them ---------------------
-    block_counts = m.groupBy("block").agg(F.count("*").alias("n"))
     hot = F.broadcast(
-        block_counts.filter(F.col("n") >= hot_block_min).select("block")
+        m.groupBy("block").count()
+        .filter(F.col("count") >= HOT_BLOCK_MIN)
+        .select("block", F.lit(SALT_FACTOR).alias("salts"))
     )
-    m = m.join(hot.withColumn("is_hot", F.lit(True)), "block", "left")
-    m = m.withColumn(
-        "salt",
-        F.when(
-            F.col("is_hot"),
-            F.pmod(F.xxhash64(F.col("mention_uri")), F.lit(salt_factor)),
-        ).otherwise(F.lit(0)),
-    ).drop("is_hot")
-    salts = F.explode(
-        F.sequence(F.lit(0), F.lit(salt_factor - 1))
-    ).alias("salt")
-    a_hot = (
-        a.join(hot, "block", "left_semi").select("auth_id", "a_label", "block")
-        .select("auth_id", "a_label", "block", salts)
+    salts = F.coalesce(F.col("salts"), F.lit(1))
+    m = m.join(hot, "block", "left").select(
+        "mention_uri", "m_label", "block",
+        F.pmod(F.xxhash64("mention_uri"), salts).alias("salt"),
     )
-    a_cold = a.join(hot, "block", "left_anti").withColumn("salt", F.lit(0))
-    a_salted = a_cold.unionByName(a_hot)
+    a = a.join(hot, "block", "left").select(
+        "auth_id", "a_label", "block",
+        F.explode(F.sequence(F.lit(0), salts - 1)).alias("salt"),
+    )
 
     cand = (
-        m.join(a_salted, ["block", "salt"])
+        m.join(a, ["block", "salt"])
         .select("mention_uri", "m_label", "auth_id", "a_label")
         .distinct()
     )

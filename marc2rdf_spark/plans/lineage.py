@@ -68,15 +68,3 @@ class LineageLog:
             F.lit(now).alias("updated_at"),
         )
         rows.write.mode("append").parquet(self.path)
-
-    def metrics(self, run_id: str) -> DataFrame:
-        return (
-            self.read()
-            .filter(F.col("run_id") == run_id)
-            .groupBy("stage")
-            .agg(
-                F.count("*").alias("partitions_done"),
-                F.sum("input_rows").alias("input_rows"),
-                F.sum("output_triples").alias("output_triples"),
-            )
-        )

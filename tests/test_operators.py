@@ -357,6 +357,76 @@ def test_linking_matches_exact_and_noisy(spark):
     assert "m3" not in links
 
 
+def test_labels_without_latin_letters_or_digits_never_link(spark):
+    """Cyrillic, CJK, punctuation-only and empty labels normalize to no
+    [a-z0-9]: they have no block (and no oracle trigram row), so they
+    never link to each other on the shared blank trigram at 1.0."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+    from marc2rdf_spark.operators.linking import link_mentions
+
+    mentions = [("m1", "Толстой, Лев"), ("m2", "?!"), ("m3", "Hamsun, Knut"),
+                ("m4", "村上春樹"), ("m5", "")]
+    auths = [("a1", "Достоевский, Фёдор"), ("a2", "..."),
+             ("a3", "Hamsun, Knut")]
+    links = {
+        (r.mention_uri, r.auth_id, r.score)
+        for r in link_mentions(
+            spark.createDataFrame(mentions, ["mention_uri", "label"]),
+            spark.createDataFrame(auths, ["auth_id", "label"]),
+            threshold=0.5,
+        ).collect()
+    }
+    assert links == {("m3", "a3", 1.0)}
+
+    con = duckdb.connect()
+    con.register("labels", pd.DataFrame(mentions + auths, columns=["id", "label"]))
+    kept = con.execute(
+        entrymod._label_trigram_cte("labels", "id", "label")
+    ).fetchall()
+    assert sorted(i for i, _ in kept) == ["a3", "m3"]
+
+
+def test_hot_block_is_salted_in_one_join(spark):
+    """HOT_BLOCK_MIN + 200 mentions with one label make every band of
+    that label a hot block: each mention still links to its authority,
+    and the executed plan joins on (block, salt) with no Union,
+    LeftSemi or LeftAnti."""
+    import re
+
+    from marc2rdf_spark.operators.linking import HOT_BLOCK_MIN, link_mentions
+    from tools.plan_audit import parse_tree_ops
+
+    hot = [(f"h{i}", "Hamsun, Knut") for i in range(HOT_BLOCK_MIN + 200)]
+    cold = [("c1", "Undset, Sigrid"), ("c2", "Ibsen, Henrik"),
+            ("c3", "Bjørnson, Bjørnstjerne")]
+    auth = spark.createDataFrame(
+        [("a0", "Hamsun, Knut"), ("a1", "Undset, Sigrid"),
+         ("a2", "Ibsen, Henrik"), ("a3", "Bjornson, Bjornstjerne"),
+         ("a4", "Lie, Jonas")],
+        ["auth_id", "label"],
+    )
+    df = link_mentions(
+        spark.createDataFrame(hot + cold, ["mention_uri", "label"]), auth,
+        threshold=0.5,
+    )
+    links = {r.mention_uri: r.auth_id for r in df.collect()}
+    assert links == {
+        **{m: "a0" for m, _ in hot}, "c1": "a1", "c2": "a2", "c3": "a3",
+    }
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    formatted = df._jdf.queryExecution().explainString(mode)
+    ops = parse_tree_ops(formatted.split("== Initial Plan ==")[0])
+    assert "Union" not in ops, ops
+    assert re.search(r"Left keys \[2\]: \[block#\d+, salt#\d+L?\]", formatted)
+    assert set(re.findall(r"Join type: (\w+)", formatted)) == {
+        "Inner", "LeftOuter"}
+
+
 def test_scorer_normalizes_like_blocker(spark):
     """The scoring UDF and the blocker's ``char_shingles`` must see the
     same trigrams: the UDF's Jaccard equals the Column Jaccard over

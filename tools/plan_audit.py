@@ -203,9 +203,10 @@ EXPECT: dict[str, dict] = {
     },
     "kg_link_entities": {
         "forbid": ["CartesianProduct"],
-        "max_shuffles": 12,
-        "why": "blocked linking: candidate pairs come from block-key "
-               "equi-joins (salted), scored by a pandas UDF",
+        "max_shuffles": 8,
+        "why": "blocked linking: candidate pairs come from one "
+               "(block, salt) equi-join; both sides left-join one "
+               "broadcast hot-block salt table; scored by a pandas UDF",
     },
     "kg_convert_dummy": {
         "require": ["MapInPandas", "BroadcastHashJoin"],
