@@ -606,10 +606,10 @@ def _q_docs_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked event-time windowed aggregation (Structured
     Streaming append mode): tumbling 1-hour windows of per-type counts
-    and exact DECIMAL value sums, emitted only when the watermark
-    passes the window end.  With watermark delay 0 the finalized set is
-    exactly the windows ending at or before max(ts) — the SQL oracle;
-    late-data dropping across batches is pinned by
+    and exact value sums in integer cents, emitted only when the
+    watermark passes the window end.  With watermark delay 0 the
+    finalized set is exactly the windows ending at or before max(ts) —
+    the SQL oracle; late-data dropping across batches is pinned by
     tests/test_stateful_streaming.py."""
     import shutil
     import tempfile
@@ -1654,7 +1654,7 @@ def oracle_sql() -> dict[str, str]:
             "mx AS (SELECT max(ts) AS m FROM events) "
             "SELECT CAST(epoch(win_start) AS BIGINT) AS win_start, "
             "event_type, count(*) AS n, "
-            "CAST(sum(v) AS DECIMAL(38,2)) AS sum_value FROM e, mx "
+            "CAST(sum(v) * 100 AS BIGINT) AS sum_cents FROM e, mx "
             "WHERE win_start + INTERVAL 1 HOUR <= m "
             "GROUP BY 1, 2"
         ),

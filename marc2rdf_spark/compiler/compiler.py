@@ -6,7 +6,10 @@ predicate/object specs, /root/reference/config/templates/
 mapping_skeleton.json) is flattened once on the driver into a small
 BROADCAST spec table (specs.py) plus regex-dispatch registries; the
 conversion plan then grows only with the regex_split registry (see
-below), not with the number of rules:
+below), not with the number of rules.  The spec table is one JSON
+literal parsed in the JVM (schema.local_frame): building and
+broadcasting it runs no Python worker task, and a spec value of the
+wrong type fails the parse instead of reading as null.
 
     records
       -> one explode of a unified field array (rec|cf|df rows)
@@ -49,7 +52,7 @@ from ..functions.exprs import (
     split_with_captures,
     urlize,
 )
-from ..schema import TRIPLE_ARRAY_DDL, TRIPLE_STRUCT_DDL
+from ..schema import TRIPLE_ARRAY_DDL, TRIPLE_STRUCT_DDL, local_frame
 from ..vocab import RDF_TYPE, Vocabulary, default_vocabulary
 from .specs import REC_TAG, SPEC_SCHEMA, Registries, flatten_mapping
 
@@ -389,7 +392,7 @@ class MappingCompiler:
         return F.concat(F.array(rec_field), cf, df_)
 
     def specs_df(self, spark) -> DataFrame:
-        return spark.createDataFrame(self.spec_rows, SPEC_SCHEMA)
+        return local_frame(spark, self.spec_rows, SPEC_SCHEMA)
 
     # -- public API ---------------------------------------------------------
     def convert(

@@ -187,7 +187,9 @@ _EMPTY_SPEC = {
 def flatten_mapping(
     mapping: Mapping, library: Library, vocab: Vocabulary
 ) -> tuple[list[dict], Registries]:
-    """-> (spec rows for createDataFrame, dispatch registries)."""
+    """-> (spec rows, dispatch registries).  Each row is a JSON-able
+    dict shaped like SPEC_SCHEMA; MappingCompiler.specs_df turns the
+    rows into the broadcast table with schema.local_frame."""
     regs = Registries()
     expand = vocab.expand
     rows: list[dict] = []

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from marc2rdf_spark.operators.textstats import WS_SPLIT
+from marc2rdf_spark.schema import local_frame
 
 # PII patterns restricted to the Java∩RE2 common dialect (no
 # alternation-preference divergence, \b is the ASCII word boundary in
@@ -157,7 +158,7 @@ def source_blocklist_filter(
     over the corpus, no corpus-side shuffle, blocklist growth never
     re-partitions the data."""
     spark = docs.sparkSession
-    bl = spark.createDataFrame([(b,) for b in blocked], "blocked string")
+    bl = local_frame(spark, [{"blocked": b} for b in blocked], "blocked string")
     cond = (F.col("source") == F.col("blocked")) | F.col("source").startswith(
         F.concat(F.col("blocked"), F.lit("."))
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schema import local_frame
 from ..vocab import RDF_TYPE, default_vocabulary
 
 # authority classes whose stale nodes get deleted on record update
@@ -45,7 +46,9 @@ def _subjects_df(triples: DataFrame, subjects) -> DataFrame:
         return subjects.select(F.col(subjects.columns[0]).alias("subj")).distinct()
     spark = triples.sparkSession
     # dedupe driver-side: keeps the broadcast subtree shuffle-free
-    return spark.createDataFrame([(s,) for s in sorted(set(subjects))], ["subj"])
+    return local_frame(
+        spark, [{"subj": s} for s in sorted(set(subjects))], "subj string"
+    )
 
 
 def select_record(triples: DataFrame, subj: str) -> DataFrame:

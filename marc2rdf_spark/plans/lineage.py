@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import LINEAGE_SCHEMA
+from ..schema import LINEAGE_SCHEMA, local_frame
 
 
 class LineageLog:
@@ -38,11 +38,17 @@ class LineageLog:
         )
 
     def read(self) -> DataFrame:
+        """The whole log; a missing log reads as an empty frame that
+        runs no Python worker task."""
         if not self._exists():
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
     def done_buckets(self, run_id: str, stage: str) -> set[int]:
+        """Buckets of (run_id, stage) with a done row.  A missing log
+        (every fresh run's first stage) answers without a Spark job."""
+        if not self._exists():
+            return set()
         rows = (
             self.read()
             .filter(

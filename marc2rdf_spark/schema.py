@@ -6,6 +6,10 @@ subfield codes repeat (reference fixture spec/example.normarc.xml:57-61).
 
 from __future__ import annotations
 
+import json
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # BASELINE.json input_hint — authoritative input shape.
@@ -87,3 +91,26 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("updated_at", T.TimestampType(), False),
     ]
 )
+
+
+def local_frame(
+    spark: SparkSession, rows: list[dict], schema: str | T.StructType
+) -> DataFrame:
+    """A small driver-side table: ``rows`` (dicts keyed by field name)
+    become one JSON literal that the JVM parses and inlines.  No Python
+    worker task runs and the relation is not RDD-backed, so scanning it
+    again re-reads the literal, not a pickled RDD.  The literal rides
+    in the plan, so this is for tables of driver size (a spec table, a
+    key list), not data.  ``schema`` is a StructType or a DDL field
+    list (``"subj string"``).  FAILFAST: a value that does not read as
+    its field's type (text in a number or boolean field) raises instead
+    of becoming null."""
+    ddl = (
+        schema.simpleString()
+        if isinstance(schema, T.StructType)
+        else f"struct<{schema}>"
+    )
+    parsed = F.from_json(
+        F.lit(json.dumps(rows)), f"array<{ddl}>", {"mode": "FAILFAST"}
+    )
+    return spark.range(1, numPartitions=1).select(F.inline(parsed))

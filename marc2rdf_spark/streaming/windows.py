@@ -14,7 +14,9 @@ Sums are computed in DECIMAL, not DOUBLE: decimal addition is exact
 and associative, so the result is independent of partitioning and
 aggregation order — required for a value-level cross-engine oracle,
 and the right call in production too (money-like rollups should not
-drift with the shuffle plan).
+drift with the shuffle plan).  The sum is emitted as integer cents:
+an all-integer row has one representation in every engine and file
+format, where a decimal's declared precision is engine-dependent.
 
 Reference counterpart: the reference's scheduler tallies per-harvest
 record/triple counts as it pages through OAI batches
@@ -34,7 +36,7 @@ def windowed_event_counts(
     watermark: str = "0 seconds",
 ) -> DataFrame:
     """Tumbling event-time windows over a STREAMING events DataFrame
-    (ts, event_type, value): (win_start, event_type, n, sum_value).
+    (ts, event_type, value): (win_start, event_type, n, sum_cents).
     With ``watermark`` = "0 seconds" the watermark equals the max event
     time seen, so after an availableNow pass every window that ENDED at
     or before the stream's max ts is finalized and emitted; the
@@ -44,10 +46,11 @@ def windowed_event_counts(
     SECONDS (bigint) — a timestamp column written by the streaming
     parquet sink round-trips as a UTC-adjusted Arrow timestamp, which
     no session-naive engine reproduces bit-for-bit, while an epoch
-    integer is representation-free; ``sum_value`` is cast to the
-    widest decimal(38,2) so the sum's declared type does not depend on
-    the engine's decimal-widening rule (Spark sum(decimal(12,2)) is
-    decimal(22,2), ANSI SQL engines commonly widen to 38)."""
+    integer is representation-free; ``sum_cents`` is the exact sum of
+    the per-row DECIMAL(12,2) values times 100, as a bigint, so the
+    output carries no decimal whose declared precision depends on the
+    engine's widening rule (Spark sum(decimal(12,2)) is decimal(22,2),
+    ANSI SQL engines commonly widen to 38)."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), "event_type")
@@ -59,7 +62,7 @@ def windowed_event_counts(
             F.col("window.start").cast("long").alias("win_start"),
             "event_type",
             "n",
-            F.col("sum_value").cast("decimal(38,2)").alias("sum_value"),
+            (F.col("sum_value") * 100).cast("long").alias("sum_cents"),
         )
     )
 

@@ -86,6 +86,8 @@ def test_conversion_plan_shape(spark, queries):
     # synthesis plus one record extract
     assert ops.count("MapInPandas") == 2, "records must be extracted once"
     assert "BroadcastHashJoin" in ops, "the spec table must broadcast"
+    assert "Scan ExistingRDD" not in ops, (
+        "the spec table is a JVM literal, not a Python-built RDD")
     assert "SortMergeJoin" not in ops
     assert "CartesianProduct" not in ops
     assert ops.count("Exchange") <= 5
@@ -134,6 +136,29 @@ def test_audit_fails_when_the_filter_matches_nothing(monkeypatch, tmp_path):
     out = tmp_path / "PLANS.md"
     assert audit(["kg_convert_skeleton"], str(out)) == 1
     assert not out.exists()
+
+
+def test_tree_ops_keep_the_scan_kind():
+    """``Scan ExistingRDD`` and ``Scan parquet`` are different leaves; a
+    ``forbid`` entry must be able to name one of them."""
+    from tools.plan_audit import parse_tree_ops
+
+    formatted = (
+        "== Physical Plan ==\n"
+        "AdaptiveSparkPlan (6)\n"
+        "+- * BroadcastHashJoin Inner BuildRight (5)\n"
+        "   :- * Filter (2)\n"
+        "   :  +- * Scan parquet  (1)\n"
+        "   +- BroadcastExchange (4)\n"
+        "      +- * Scan ExistingRDD (3)\n"
+        "\n\n"
+        "(1) Scan parquet \n"
+        "(3) Scan ExistingRDD [codegen id : 2]\n"
+    )
+    assert parse_tree_ops(formatted) == [
+        "AdaptiveSparkPlan", "BroadcastHashJoin", "Filter", "Scan parquet",
+        "BroadcastExchange", "Scan ExistingRDD",
+    ]
 
 
 def test_read_schema_width_counts_top_level_fields():

@@ -85,10 +85,10 @@ def test_windowed_counts_drop_late_rows(spark, tmp_path):
     h0 = int(dt.datetime(2024, 1, 1, 0, 0, tzinfo=dt.timezone.utc).timestamp())
     h1 = int(dt.datetime(2024, 1, 1, 1, 0, tzinfo=dt.timezone.utc).timestamp())
     rows1 = {
-        (r.win_start, r.n, str(r.sum_value))
+        (r.win_start, r.n, r.sum_cents)
         for r in spark.read.parquet(out).collect()
     }
-    assert rows1 == {(h0, 2, "3.00")}
+    assert rows1 == {(h0, 2, 300)}
 
     # run 2 (restart): a LATE row for the already-finalized hour-0
     # window plus a fresh hour-2 event that closes hour 1
@@ -100,10 +100,10 @@ def test_windowed_counts_drop_late_rows(spark, tmp_path):
     )
     run_windowed_counts(spark, ev, out, ckpt)
     rows2 = {
-        (r.win_start, r.n, str(r.sum_value))
+        (r.win_start, r.n, r.sum_cents)
         for r in spark.read.parquet(out).collect()
     }
     assert rows2 == {
-        (h0, 2, "3.00"),  # NOT re-emitted/+100
-        (h1, 1, "4.00"),
+        (h0, 2, 300),  # NOT re-emitted/+100
+        (h1, 1, 400),
     }

@@ -9,7 +9,8 @@ executing the query, parses the numbered operator tree, and asserts:
 - ``forbid``: operators that must not appear anywhere in the plan
   (``CartesianProduct`` globally; ``SortMergeJoin`` where a broadcast
   join is the designed strategy; shuffle ``Exchange`` where the
-  operator promises a zero-shuffle plan).
+  operator promises a zero-shuffle plan; ``Scan ExistingRDD`` where
+  every driver-side table must be a JVM literal, not a Python RDD).
 - ``require``: operators that must appear (the Arrow ``MapInPandas``
   extract stage, ``BroadcastHashJoin``/``BroadcastNestedLoopJoin``
   where a small side is deliberately broadcast, partial aggregation).
@@ -64,14 +65,16 @@ EXPECT: dict[str, dict] = {
     # one higher-order-function emission -> one dedup shuffle (+AQE reads)
     "kg_convert_skeleton": {
         "require": ["MapInPandas", "BroadcastHashJoin"],
-        "forbid": ["CartesianProduct", "SortMergeJoin"],
+        "forbid": ["CartesianProduct", "SortMergeJoin",
+                   "Scan ExistingRDD"],
         "max_shuffles": 5,
         "why": "Arrow extract + broadcast spec join; dedup is the only "
                "required wide stage",
     },
     "kg_convert_binary": {
         "require": ["MapInPandas", "BroadcastHashJoin"],
-        "forbid": ["CartesianProduct", "SortMergeJoin"],
+        "forbid": ["CartesianProduct", "SortMergeJoin",
+                   "Scan ExistingRDD"],
         "max_shuffles": 5,
         "why": "same emission plan as skeleton over the ISO-2709 reader",
     },
@@ -210,7 +213,8 @@ EXPECT: dict[str, dict] = {
     },
     "kg_convert_dummy": {
         "require": ["MapInPandas", "BroadcastHashJoin"],
-        "forbid": ["CartesianProduct", "SortMergeJoin"],
+        "forbid": ["CartesianProduct", "SortMergeJoin",
+                   "Scan ExistingRDD"],
         "max_shuffles": 5,
         "why": "same Arrow-extract + broadcast-spec emission plan "
                "over the dummy mapping",
@@ -347,13 +351,16 @@ EXPECT: dict[str, dict] = {
     },
 }
 
-TREE_OP = re.compile(r"^[\s:+*-]*([A-Za-z][A-Za-z0-9]*)\b[^\n]*\((\d+)\)\s*$")
+TREE_OP = re.compile(
+    r"^[\s:+*-]*((?:Scan )?[A-Za-z][A-Za-z0-9]*)\b[^\n]*\((\d+)\)\s*$")
 DETAIL_HDR = re.compile(r"^\(\d+\) ")
 
 
 def parse_tree_ops(formatted: str) -> list[str]:
     """Operator names from the numbered tree section only (the detail
-    section repeats every node and would double-count)."""
+    section repeats every node and would double-count).  A scan keeps
+    its kind (``Scan parquet``, ``Scan ExistingRDD``) so a ``forbid``
+    entry can name one."""
     ops = []
     for line in formatted.splitlines():
         if DETAIL_HDR.match(line):
