@@ -38,6 +38,15 @@ exactly once, by putting the per-row spec switch inside the element
 lambda.  A stage written when(on, f(prev)).otherwise(prev) doubles the
 tree per stage — exponential in the number of stages
 (tests/test_compiler_stages.py pins the analyzed plan size).
+
+Built once per process: the ~2,250-node expression tree costs ~6,400
+py4j calls to build, and reads only the identifier tag, the subject base
+(library base + prefix) and the regex_split registry (patterns and maps
+ride in the spec table; RDF_TYPE is a constant).  Those three values key
+one module-level cache, so any compiler over an equal mapping reuses the
+tree.  Its columns are by name (F.col) or lambda variables, bound to no
+DataFrame, so one tree serves any records frame; a warm convert() only
+assembles the DataFrame (~160 py4j calls).
 """
 
 from __future__ import annotations
@@ -60,6 +69,9 @@ FIELD_DDL = (
     "struct<kind:string,tag:string,value:string,ind1:string,ind2:string,"
     "subfields:array<struct<code:string,value:string>>>"
 )
+
+# (identifier tag, subject base, split registry) -> MappingCompiler._tree()
+_TREES: dict[tuple, tuple[Column, ...]] = {}
 
 
 def _empty_triples() -> Column:
@@ -394,31 +406,18 @@ class MappingCompiler:
     def specs_df(self, spark) -> DataFrame:
         return local_frame(spark, self.spec_rows, SPEC_SCHEMA)
 
-    # -- public API ---------------------------------------------------------
-    def convert(
-        self,
-        records: DataFrame,
-        cache_records: bool = False,
-    ) -> DataFrame:
-        """records DF (schema.RECORDS_SCHEMA) -> triples DF.  One scan,
-        one broadcast join, no shuffle; dedup is the materialize
-        stage's concern (G8, SURVEY.md §2.4).  A ``url`` column, when
-        present, is carried onto every triple.  The plan sets no session
-        conf and gives the same triples under any ANSI or
-        mapKeyDedupPolicy setting.
+    def _tree(self) -> tuple[Column, ...]:
+        """(identifier guard, subject, field array, sf_first, row guard,
+        triple array), built once per key (see the module docstring)."""
+        lib = self.library
+        key = (
+            lib.identifier_tag, lib.base + lib.prefix, tuple(self.regs.split)
+        )
+        if key not in _TREES:
+            _TREES[key] = self._build_tree()
+        return _TREES[key]
 
-        cache_records persists the input records (pruned to the needed
-        columns, memory and disk).  The plan reads its records once, so
-        the pipeline never sets it; it stays because the perfbench
-        workloads pass it."""
-        kept = ["url"] if "url" in records.columns else []
-        if cache_records:
-            from pyspark import StorageLevel
-
-            records = records.select(*kept, "record").persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        spark = records.sparkSession
+    def _build_tree(self) -> tuple[Column, ...]:
         record = F.col("record")
         field = F.col("field")
         # first-subfield semantics (ruby-marc field[code]): keep only the
@@ -441,19 +440,6 @@ class MappingCompiler:
         # Field-less OAI deleted-header envelopes parse to exactly this
         # shape; the tombstone path handles them, conversion skips them.
         ident = self.identifier_expr(record)
-        fields = records.filter(
-            ident.isNotNull() & (ident != "")
-        ).select(
-            *kept,
-            self.subject_expr(record).alias("subj"),
-            F.explode(self._fields_array(record)).alias("field"),
-        ).select(
-            *kept, "subj", "field",
-            F.col("field.tag").alias("tag"), F.col("field.kind").alias("kind"),
-            sf_first_expr.alias("sf_first"),
-        )
-
-        joined = fields.join(F.broadcast(self.specs_df(spark)), ["tag", "kind"])
 
         spec = F.col("spec")
         subj = F.col("subj")
@@ -482,7 +468,52 @@ class MappingCompiler:
             lambda o: (kind != "cf") | ~is_blank_stripped(o),
         )
         emission = self._emission(subj, field, spec, pred)
-        triples_arr = F.flatten(F.transform(objs, emission))
+        return (
+            ident.isNotNull() & (ident != ""), self.subject_expr(record),
+            self._fields_array(record), sf_first_expr, guard,
+            F.flatten(F.transform(objs, emission)),
+        )
+
+    # -- public API ---------------------------------------------------------
+    def convert(
+        self,
+        records: DataFrame,
+        cache_records: bool = False,
+    ) -> DataFrame:
+        """records DF (schema.RECORDS_SCHEMA) -> triples DF.  One scan,
+        one broadcast join, no shuffle; dedup is the materialize
+        stage's concern (G8, SURVEY.md §2.4).  A ``url`` column, when
+        present, is carried onto every triple.  The plan sets no session
+        conf and gives the same triples under any ANSI or
+        mapKeyDedupPolicy setting.
+
+        The expression tree comes from the process-wide cache, so a
+        warm call only assembles the DataFrame around it.
+
+        cache_records persists the input records (pruned to the needed
+        columns, memory and disk).  The plan reads its records once, so
+        the pipeline never sets it; it stays because the perfbench
+        workloads pass it."""
+        kept = ["url"] if "url" in records.columns else []
+        if cache_records:
+            from pyspark import StorageLevel
+
+            records = records.select(*kept, "record").persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+        spark = records.sparkSession
+        has_ident, subj, fields_arr, sf_first, guard, triples_arr = self._tree()
+        fields = records.filter(has_ident).select(
+            *kept,
+            subj.alias("subj"),
+            F.explode(fields_arr).alias("field"),
+        ).select(
+            *kept, "subj", "field",
+            F.col("field.tag").alias("tag"), F.col("field.kind").alias("kind"),
+            sf_first.alias("sf_first"),
+        )
+
+        joined = fields.join(F.broadcast(self.specs_df(spark)), ["tag", "kind"])
         # F.inline = explode + struct-expansion in ONE generator: one
         # fewer chained select, and each chained DataFrame op on this
         # tree costs a full eager JVM analysis pass.

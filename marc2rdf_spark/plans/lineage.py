@@ -17,7 +17,9 @@ maps to MERGE + snapshot isolation."""
 from __future__ import annotations
 
 import datetime as dt
+import operator
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,22 +46,27 @@ class LineageLog:
             return local_frame(self.spark, [], LINEAGE_SCHEMA)
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
-    def done_buckets(self, run_id: str, stage: str) -> set[int]:
-        """Buckets of (run_id, stage) with a done row.  A missing log
-        (every fresh run's first stage) answers without a Spark job."""
+    def done_buckets(
+        self, *keys: tuple[str, str]
+    ) -> dict[tuple[str, str], set[int]]:
+        """Buckets with a done row, per (run_id, stage) key, in one read.
+        A missing log (every fresh run) answers without a Spark job."""
+        done: dict[tuple[str, str], set[int]] = {k: set() for k in keys}
         if not self._exists():
-            return set()
+            return done
+        wanted = reduce(operator.or_, [
+            (F.col("run_id") == run_id) & (F.col("stage") == stage)
+            for run_id, stage in keys
+        ])
         rows = (
             self.read()
-            .filter(
-                (F.col("run_id") == run_id)
-                & (F.col("stage") == stage)
-                & (F.col("status") == "done")
-            )
-            .select("partition_id")
+            .filter(wanted & (F.col("status") == "done"))
+            .select("run_id", "stage", "partition_id")
             .collect()
         )
-        return {r.partition_id for r in rows}
+        for r in rows:
+            done[(r.run_id, r.stage)].add(r.partition_id)
+        return done
 
     def append(self, run_id: str, stage: str, bucket_counts: DataFrame) -> None:
         """bucket_counts: (partition_id, input_rows, output_triples)."""

@@ -57,6 +57,7 @@ def _overwrite_partitions(df: DataFrame, path: str) -> None:
 
 def _run_stage(
     lineage: LineageLog,
+    done: dict[tuple[str, str], set[int]],
     run_id: str,
     stage: str,
     source: DataFrame,
@@ -64,7 +65,8 @@ def _run_stage(
     path: str,
 ) -> None:
     """Run one resumable stage over the buckets of ``source`` that have
-    no done lineage row for (run_id, stage).
+    no done lineage row for (run_id, stage) in ``done``, the log as read
+    at the start of the run.
 
     ``source`` is the stage's bucketed input as scanned, so the
     emptiness probe reads a scan, never a shuffle.  ``build`` turns the
@@ -72,8 +74,8 @@ def _run_stage(
     inside the eager checkpoint, and its buckets are committed by
     dynamic partition overwrite before their lineage rows are appended
     (a bucket is done only once its data is)."""
-    done = lineage.done_buckets(run_id, stage)
-    todo = source.filter(~F.col("bucket").isin(list(done))) if done else source
+    skip = done[(run_id, stage)]
+    todo = source.filter(~F.col("bucket").isin(list(skip))) if skip else source
     if todo.isEmpty():
         return
     out = build(todo).localCheckpoint(eager=True)
@@ -111,6 +113,11 @@ def run_resumable(
         mapping = load_mapping(mapping)
     extract_id = extract_id or run_id
     lineage = LineageLog(spark, f"{out_dir}/_lineage")
+    # one lineage read per run: a stage appends only its own rows, after
+    # its own read, so what each stage would read itself is read here
+    done = lineage.done_buckets(
+        (extract_id, EXTRACT_STAGE), (run_id, RAW_STAGE), (run_id, FINAL_STAGE)
+    )
     # staging zone keyed BY PATH per extract_id (not just in lineage):
     # two runs with different extract_ids in one out_dir must not mix
     # staged buckets (dynamic partition overwrite would leave the other
@@ -121,7 +128,7 @@ def run_resumable(
 
     # ---- stage 0: extract (raw pre-conversion staging zone, S5) --------
     _run_stage(
-        lineage, extract_id, EXTRACT_STAGE,
+        lineage, done, extract_id, EXTRACT_STAGE,
         _with_bucket(pages, ["url"], n_buckets),
         lambda todo: _with_bucket(
             extract_and_parse(todo.drop("bucket")), ["url"], n_buckets
@@ -139,7 +146,7 @@ def run_resumable(
             "extract_id whose extract stage ran in this out_dir"
         ) from e
     _run_stage(
-        lineage, run_id, RAW_STAGE, raw_records,
+        lineage, done, run_id, RAW_STAGE, raw_records,
         lambda todo: _with_bucket(
             MappingCompiler(mapping, Library()).convert(todo.drop("bucket")),
             ["url"], n_buckets,
@@ -149,7 +156,7 @@ def run_resumable(
 
     # ---- stage 2: materialize (global dedup via triple-hash buckets) ---
     _run_stage(
-        lineage, run_id, FINAL_STAGE,
+        lineage, done, run_id, FINAL_STAGE,
         _with_bucket(
             spark.read.parquet(raw_path).drop("bucket"), TRIPLE_COLS,
             n_buckets,

@@ -7,13 +7,24 @@ lambda.  The form when(on, f(arr)).otherwise(arr) doubles the tree at
 every stage; the size pin below catches it coming back.  The parity
 test turns every stage switch on, in the object position and inside a
 relation block, and checks the result against the pure-Python oracle.
+The tree is built once per process: a warm convert() reuses it, plans
+like a fresh build, and never serves another mapping's or library's
+tree.
 """
 
+import gc
 import re
+import threading
 from collections import Counter
 
 from marc2rdf_spark.compiler import MappingCompiler
-from marc2rdf_spark.config import Library, Mapping, load_skeleton_mapping
+from marc2rdf_spark.config import (
+    SPEC_LIBRARY,
+    Library,
+    Mapping,
+    load_dummy_mapping,
+    load_skeleton_mapping,
+)
 from marc2rdf_spark.marc import (
     ControlField,
     DataField,
@@ -24,6 +35,7 @@ from marc2rdf_spark.marc import (
 )
 from marc2rdf_spark.oracle.converter import convert_records
 from marc2rdf_spark.schema import RECORDS_SCHEMA
+from marc2rdf_spark.sources.synth import variant_record
 
 TRIPLE_COLS = ["subj", "pred", "obj", "obj_is_uri", "lang", "dtype"]
 
@@ -48,6 +60,15 @@ def _expression_nodes(jplan) -> int:
         )
 
     return walk(jplan)
+
+
+def _records_df(spark, records: list[Record]):
+    rows = [
+        {"url": f"u{i}", "record_xml": record_to_xml(r),
+         "record": record_to_dict(r)}
+        for i, r in enumerate(records)
+    ]
+    return spark.createDataFrame(rows, RECORDS_SCHEMA)
 
 
 def test_skeleton_plan_size_is_pinned(spark):
@@ -182,12 +203,7 @@ def _stage_records() -> list[Record]:
 
 def test_stage_switches_match_oracle(spark):
     records = _stage_records()
-    rows = [
-        {"url": f"u{i}", "record_xml": record_to_xml(r),
-         "record": record_to_dict(r)}
-        for i, r in enumerate(records)
-    ]
-    records_df = spark.createDataFrame(rows, RECORDS_SCHEMA)
+    records_df = _records_df(spark, records)
     comp = MappingCompiler(STAGES_MAPPING, Library())
     assert comp.regs.split, "fixture must reach the regex_split dispatch"
     got = Counter(
@@ -210,3 +226,86 @@ def test_stage_switches_match_oracle(spark):
     assert ("notation", "12") in objs  # substr in relation
     assert ("language", LEXVO + "nob") in objs
     assert ("language", LEXVO + "eng") in objs
+
+
+# ---------------------------------------------------------------------------
+# The Column tree is built once per process and keyed by what it reads
+# (identifier tag, subject base, split registry): a warm convert() only
+# assembles the DataFrame, and no key ever serves another key's tree.
+# ---------------------------------------------------------------------------
+
+def _py4j_calls(fn) -> int:
+    """py4j commands that fn() sends from this thread, with the cyclic
+    collector off so that py4j's deletes of collected objects do not
+    count (other threads send such deletes too)."""
+    from py4j.java_gateway import GatewayClient
+
+    calls = 0
+    send = GatewayClient.send_command
+    caller = threading.current_thread()
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.current_thread() is caller
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    GatewayClient.send_command = counting
+    try:
+        fn()
+    finally:
+        GatewayClient.send_command = send
+        gc.enable()
+    return calls
+
+
+def test_warm_convert_reuses_the_tree(spark):
+    records = _records_df(spark, [variant_record(i) for i in range(3)])
+    MappingCompiler(load_skeleton_mapping(), Library()).convert(records)
+    # a fresh compiler over an equal mapping: ~6,400 calls when the tree
+    # is rebuilt, ~160 when it is reused
+    calls = _py4j_calls(
+        lambda: MappingCompiler(load_skeleton_mapping(), Library()).convert(
+            records
+        )
+    )
+    assert calls <= 300, f"warm convert() made {calls} py4j calls"
+
+
+def test_cached_tree_plans_like_a_fresh_one(spark, monkeypatch):
+    from marc2rdf_spark.compiler import compiler
+
+    warm = _records_df(spark, [variant_record(0)])
+    records = _records_df(spark, [variant_record(i) for i in range(1, 4)])
+    comp = MappingCompiler(load_skeleton_mapping(), Library())
+    comp.convert(warm)
+    cached = comp.convert(records)._jdf.queryExecution().analyzed()
+    monkeypatch.setattr(compiler, "_TREES", {})
+    fresh = comp.convert(records)._jdf.queryExecution().analyzed()
+    assert cached.sameResult(fresh)
+
+
+def test_interleaved_conversions_keep_their_triples(spark):
+    records = [variant_record(i) for i in range(4)]
+    records_df = _records_df(spark, records)
+    cases = [
+        (load_skeleton_mapping(), Library()),
+        (load_dummy_mapping(), Library()),
+        (STAGES_MAPPING, Library()),
+        (load_skeleton_mapping(), SPEC_LIBRARY),
+        (load_dummy_mapping(), SPEC_LIBRARY),
+        (load_skeleton_mapping(), Library()),
+    ]
+    for mapping, library in cases:
+        got = Counter(
+            tuple(r)
+            for r in MappingCompiler(mapping, library)
+            .convert(records_df).select(TRIPLE_COLS).collect()
+        )
+        expected = Counter(
+            tuple(t)
+            for t in convert_records(records, mapping, library, dedup=False)
+        )
+        assert got == expected
+        assert got  # non-vacuous

@@ -59,7 +59,7 @@ def test_missing_lineage_log_runs_no_spark_job(spark, tmp_path):
     group = "missing-lineage-probe"
     sc.setJobGroup(group, "done_buckets over a missing log")
     try:
-        assert log.done_buckets("r1", "extract") == set()
+        assert log.done_buckets(("r1", "extract")) == {("r1", "extract"): set()}
     finally:
         sc.setJobGroup(None, None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -134,3 +134,19 @@ def test_mapping_replay_reuses_raw_records(spark, tmp_path):
         lineage.read().filter(F.col("stage") == EXTRACT_STAGE).count()
         == n_extract
     )
+
+
+def test_run_reads_the_lineage_log_once(spark, tmp_path, monkeypatch):
+    """run_resumable reads the done buckets of all three stages in one
+    read at its start; a fresh output directory has no log, so nothing
+    reads it at all."""
+    reads = []
+    read = LineageLog.read
+    monkeypatch.setattr(
+        LineageLog, "read", lambda self: reads.append(1) or read(self)
+    )
+    out = str(tmp_path / "kg4")
+    full = _tripleset(_run(spark, out))
+    assert reads == []
+    assert _tripleset(_run(spark, out)) == full  # every stage done
+    assert reads == [1]

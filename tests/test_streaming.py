@@ -231,3 +231,25 @@ def test_legacy_unstamped_tombstone_still_purges(spark, tmp_path):
     ).write.mode("append").parquet(store + "_tombstones")
     read = {(r.subj, r.obj) for r in read_converted(spark, store).collect()}
     assert read == rows
+
+
+def test_micro_batches_build_the_mapping_once(spark, tmp_path, monkeypatch):
+    """Every micro-batch converts with a fresh MappingCompiler; the
+    Column tree is built by the first and reused by the next."""
+    from marc2rdf_spark.compiler import MappingCompiler, compiler
+
+    monkeypatch.setattr(compiler, "_TREES", {})
+    builds = []
+    build = MappingCompiler._build_tree
+    monkeypatch.setattr(
+        MappingCompiler, "_build_tree",
+        lambda self: builds.append(1) or build(self),
+    )
+    pages = str(tmp_path / "pages")
+    out = str(tmp_path / "triples")
+    ckpt = str(tmp_path / "ckpt")
+    for start in (0, 3):
+        _write_pages(spark, pages, start, start + 3)
+        run_available_now(spark, pages, out, ckpt, mapping="dummy")
+    assert spark.read.parquet(out).select("batch_id").distinct().count() == 2
+    assert len(builds) == 1
