@@ -69,15 +69,27 @@ class LineageLog:
         return done
 
     def append(self, run_id: str, stage: str, bucket_counts: DataFrame) -> None:
-        """bucket_counts: (partition_id, input_rows, output_triples)."""
-        now = dt.datetime.now()
-        rows = bucket_counts.select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.col("partition_id").cast("int"),
-            F.col("input_rows").cast("long"),
-            F.col("output_triples").cast("long"),
-            F.lit("done").alias("status"),
-            F.lit(now).alias("updated_at"),
-        )
-        rows.write.mode("append").parquet(self.path)
+        """bucket_counts: (partition_id, input_rows, output_triples).
+
+        The counts (one row per bucket) are collected and written back
+        as one ``local_frame`` with the run's timestamp inside its JSON
+        literal.  A string literal reaches generated code as a reference
+        to a constant, but a timestamp literal (``F.lit(now)``) is
+        inlined into the generated Java: every call would then produce
+        a new source and compile its classes again, in every warm job."""
+        now = dt.datetime.now().astimezone().isoformat()
+        rows = [
+            {
+                "run_id": run_id,
+                "stage": stage,
+                "partition_id": r.partition_id,
+                "input_rows": r.input_rows,
+                "output_triples": r.output_triples,
+                "status": "done",
+                "updated_at": now,
+            }
+            for r in bucket_counts.collect()
+        ]
+        local_frame(self.spark, rows, LINEAGE_SCHEMA).write.mode(
+            "append"
+        ).parquet(self.path)

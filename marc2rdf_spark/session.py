@@ -7,6 +7,20 @@ tests override parallelism via ``cores``.
 SQL semantics keep Spark's defaults (ANSI on, ``mapKeyDedupPolicy``
 EXCEPTION), so the library, its tests and any caller's vanilla session
 all evaluate plans the same way; no code depends on overriding them.
+
+Generated code is compiled once per process.  Spark caches each compiled
+class by its generated source in one JVM-wide LRU cache of
+``spark.sql.codegen.cache.maxEntries`` entries (default 100).  The
+pipeline's working set is larger.  Counted with the cache emptied before
+a warm perfbench job at local[4], a ``link_cc`` job (link -> connected
+components -> canonicalize -> write) generates 163 distinct sources, the
+same in every job, so at 100 entries each warm job ran ~155 janino
+compiles; a ``convert`` job (``run_resumable``) generates 90.  One
+``jobs/convert_job.py --synth-pages 600 --link`` process compiles 244
+distinct sources.  ``CODEGEN_CACHE_ENTRIES`` holds the largest of these
+with 4x headroom; the cache holds compiled classes only, a few MB.  The
+conf is static (read when the first class is generated), so it is set
+here, at session build, and is not an option.
 """
 
 from __future__ import annotations
@@ -14,6 +28,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -50,6 +66,7 @@ def get_spark(
             os.environ.get("SPARK_GC_OPTS", "-XX:+UseParallelGC"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Diagnostic mode: SPARK_CODEGEN_FALLBACK=false turns a janino
         # whole-stage-codegen compile failure into a hard error that
         # NAMES the failing stage instead of silently running it

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..config import Library, Mapping
 from ..plans.pipeline import TRIPLE_COLS, convert_pages
-from ..schema import WEB_PAGES_SCHEMA
+from ..schema import WEB_PAGES_SCHEMA, local_frame
 
 
 def window_batch(
@@ -140,6 +140,12 @@ def run_available_now(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        # the batch stamp is a one-row table joined on, not F.lit: an
+        # integer literal is inlined into the generated code, so every
+        # micro-batch would compile its write stages again
+        stamp = local_frame(
+            batch_df.sparkSession, [{"batch_id": batch_id}], "batch_id bigint"
+        )
         tomb = F.col("text").rlike(TOMBSTONE_RE)
         # A single OAI ListRecords response carries live AND deleted
         # records (scheduler.rb:376-383 walks them one by one), so
@@ -158,15 +164,15 @@ def run_available_now(
             # survives — matching the reference's immediate SPARQL
             # DELETE ordering (sparql_update.rb: delete happens when the
             # tombstone arrives, later re-harvests re-insert)
-            triples.select(*TRIPLE_COLS).withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ).write.mode("append").parquet(out_path)
+            triples.select(*TRIPLE_COLS).crossJoin(stamp).write.mode(
+                "append"
+            ).parquet(out_path)
         tombs = parse_tombstones(batch_df.filter(tomb), library)
         if not tombs.isEmpty():
             # merge-on-read deletion markers (resolved by read_converted)
-            tombs.withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ).write.mode("append").parquet(out_path + "_tombstones")
+            tombs.crossJoin(stamp).write.mode("append").parquet(
+                out_path + "_tombstones"
+            )
 
     (
         stream.writeStream.foreachBatch(process_batch)

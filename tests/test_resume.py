@@ -2,13 +2,22 @@
 with the same run_id, assert the final triple set is identical and
 deduplicated (FIXTURES.md §6)."""
 
+import datetime as dt
+import glob
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from marc2rdf_spark.plans.lineage import LineageLog
-from marc2rdf_spark.plans.materialize import FINAL_STAGE, run_resumable
+from marc2rdf_spark.plans.materialize import (
+    EXTRACT_STAGE,
+    FINAL_STAGE,
+    RAW_STAGE,
+    run_resumable,
+)
+from marc2rdf_spark.schema import LINEAGE_SCHEMA
 from marc2rdf_spark.sources.synth import synth_web_pages
 
 N_PAGES = 33
@@ -150,3 +159,44 @@ def test_run_reads_the_lineage_log_once(spark, tmp_path, monkeypatch):
     assert reads == []
     assert _tripleset(_run(spark, out)) == full  # every stage done
     assert reads == [1]
+
+
+def test_fresh_run_lineage_matches_committed_zones(spark, tmp_path):
+    """One done row per (stage, bucket) whose counts are those of the
+    bucket as committed, stamped inside the run's wall-clock window and
+    written with the log's own column types."""
+    out = str(tmp_path / "kg")
+    t0 = dt.datetime.now()
+    _run(spark, out)
+    t1 = dt.datetime.now()
+
+    def committed(stage, zone, distinct_urls):
+        per_bucket = spark.read.parquet(f"{out}/{zone}").groupBy("bucket").agg(
+            F.countDistinct("url") if distinct_urls
+            else F.lit(None).cast("long"),
+            F.count("*"),
+        )
+        return {("r1", stage, *r, "done") for r in per_bucket.collect()}
+
+    expected = (
+        committed(EXTRACT_STAGE, "raw_records/r1", True)
+        | committed(RAW_STAGE, "raw_triples", True)
+        | committed(FINAL_STAGE, "triples", False)
+    )
+    rows = LineageLog(spark, f"{out}/_lineage").read().collect()
+    assert {
+        (r.run_id, r.stage, r.partition_id, r.input_rows, r.output_triples,
+         r.status)
+        for r in rows
+    } == expected
+    assert len(rows) == len(expected)
+    assert all(t0 <= r.updated_at <= t1 for r in rows)
+
+    # the files themselves, read without the log's schema
+    written = spark.read.parquet(f"{out}/_lineage").schema
+    assert [(f.name, f.dataType) for f in written] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
+    arrow = pq.read_schema(glob.glob(f"{out}/_lineage/*.parquet")[0])
+    assert str(arrow.field("partition_id").type) == "int32"
+    assert str(arrow.field("updated_at").type).startswith("timestamp[")
