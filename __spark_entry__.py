@@ -983,8 +983,8 @@ CATALOGUE_NAME = "http://def.bibsys.no/xmlns/radatana/1.0#catalogueName"
 
 
 def _norm_label_sql(col: str) -> str:
-    """SQL replica of linking._norm_label / the scoring UDF's tri()
-    normalization: accent-fold (urlize char map) -> lower -> keep
+    """SQL replica of linking._norm_label (the normalization under
+    linking.char_shingles): accent-fold (urlize char map) -> lower -> keep
     [a-z0-9 ]."""
     from marc2rdf_spark.functions.textsem import (
         MULTI_CLASSES,

@@ -165,9 +165,9 @@ def connected_components(
     128-bit id instead — same plan, two hash columns)."""
     # Materialize the input ONCE: the node table and the first round
     # both read it, and without this each would recompute the full
-    # upstream plan (e.g. the salted blocked-linking join + pandas-UDF
-    # scoring feeding sameas_edges) — measured 2x the linking job,
-    # ~3 s of the 10 s link+CC bench at sf0.1.
+    # upstream plan (e.g. the salted blocked-linking join and its
+    # trigram-Jaccard scoring feeding sameas_edges) — measured 2x the
+    # linking job, ~3 s of the 10 s link+CC bench at sf0.1.
     raw = (
         edges.select(
             F.col("left_uri").alias("src"), F.col("right_uri").alias("dst")

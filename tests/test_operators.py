@@ -427,14 +427,28 @@ def test_hot_block_is_salted_in_one_join(spark):
         "Inner", "LeftOuter"}
 
 
+def _tri(s: str) -> set:
+    """Plain-Python reference for the linker's character trigrams."""
+    from marc2rdf_spark.functions.textsem import py_replacecharacters
+
+    s = py_replacecharacters((s or "").strip(" ")).lower()
+    s = " " + "".join(ch for ch in s if ("a" <= ch <= "z") or ("0" <= ch <= "9") or ch == " ") + " "
+    return {s[i : i + 3] for i in range(max(len(s) - 2, 1))}  # noqa: E203
+
+
+def _jaccard(x: str, y: str) -> float:
+    """Plain-Python reference for the linker's trigram Jaccard."""
+    ta, tb = _tri(x), _tri(y)
+    inter = len(ta & tb)
+    union = len(ta | tb) or 1
+    return inter / union
+
+
 def test_scorer_normalizes_like_blocker(spark):
-    """The scoring UDF and the blocker's ``char_shingles`` must see the
-    same trigrams: the UDF's Jaccard equals the Column Jaccard over
-    ``char_shingles`` (space-only trim, accent fold, punctuation drop)."""
-    from marc2rdf_spark.operators.linking import (
-        char_shingles,
-        trigram_jaccard_udf,
-    )
+    """The linker's Column Jaccard over ``char_shingles`` equals the
+    plain-Python reference (space-only trim, accent fold, punctuation
+    drop) on the same adversarial strings."""
+    from marc2rdf_spark.operators.linking import char_shingles, trigram_jaccard
 
     pairs = spark.createDataFrame(
         [
@@ -448,15 +462,71 @@ def test_scorer_normalizes_like_blocker(spark):
         ],
         ["a", "b"],
     )
-    sa, sb = char_shingles(F.col("a")), char_shingles(F.col("b"))
-    column = F.size(F.array_intersect(sa, sb)) / F.size(F.array_union(sa, sb))
-    rows = pairs.select(
-        "a", "b", trigram_jaccard_udf("a", "b").alias("udf"),
-        column.alias("column"),
-    ).collect()
-    assert [(r.a, r.b, r.udf) for r in rows] == [
+    column = trigram_jaccard(char_shingles(F.col("a")), char_shingles(F.col("b")))
+    rows = pairs.select("a", "b", column.alias("column")).collect()
+    assert [(r.a, r.b, _jaccard(r.a, r.b)) for r in rows] == [
         (r.a, r.b, r.column) for r in rows
     ]
+
+
+def _head_blocks(df, id_col, label_col):
+    """Reference MinHash blocking: explode the trigrams, then one MIN
+    aggregate per seed over each (id, label)."""
+    from marc2rdf_spark.operators.linking import BANDS, ROWS, _norm_label
+
+    norm = _norm_label(F.col(label_col))
+    padded = F.concat(F.lit(" "), norm, F.lit(" "))
+    idx = F.sequence(F.lit(0), F.greatest(F.length(padded) - 3, F.lit(0)))
+    shingles = F.array_distinct(
+        F.transform(idx, lambda i: F.substring(padded, i + 1, 3))
+    )
+    sh = df.filter(norm.rlike("[a-z0-9]")).select(
+        id_col, label_col, F.explode(shingles).alias("s")
+    )
+    sig = sh.groupBy(id_col, label_col).agg(*[
+        F.min(F.xxhash64("s", F.lit(seed))).alias(f"mh{seed}")
+        for seed in range(BANDS * ROWS)
+    ])
+    band_arr = F.array(*[
+        F.hash(F.array(*[F.col(f"mh{b * ROWS + r}") for r in range(ROWS)]))
+        for b in range(BANDS)
+    ])
+    return sig.select(id_col, F.explode(band_arr).alias("block"))
+
+
+def test_row_level_minhash_matches_aggregate_reference(spark):
+    """``blocked``'s per-row array_min signatures give the same
+    (id, block) rows as exploding the trigrams and aggregating one MIN
+    per seed, on adversarial labels and the golden mentions; the
+    trigram array is projected once, not re-folded per seed."""
+    import os
+
+    from marc2rdf_spark.operators.linking import blocked, mention_nodes
+
+    adversarial = spark.createDataFrame(
+        [("e", ""), ("p", "?!.,"), ("c", "Толстой, Лев"), ("j", "村上春樹"),
+         ("t", "\t Hamsun, Knut  "), ("b", "Bjørnson, Bjørnstjerne"),
+         ("k", "K")],
+        ["id", "label"],
+    )
+    golden = os.path.join(os.path.dirname(__file__), "..", "fixtures", "golden")
+    mentions = mention_nodes(
+        spark.read.parquet(os.path.join(golden, "triples_skeleton.parquet")),
+        ["http://def.bibsys.no/xmlns/radatana/1.0#catalogueName"],
+    ).select(F.col("mention_uri").alias("id"), "label")
+    for df in (adversarial, mentions):
+        got = sorted(map(tuple, blocked(df, "id", "label")
+                         .select("id", "block").collect()))
+        want = sorted(map(tuple, _head_blocks(df, "id", "label").collect()))
+        assert got == want and got
+
+    plan = blocked(adversarial, "id", "label")._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    # one projection of the trigram array and one no-[a-z0-9] filter;
+    # inlining the shingles into each seed's minimum would make it 1 + 32
+    assert plan.count("array_distinct(") == 1, plan
+    assert plan.count("translate(") == 2, plan
+    assert plan.count("array_min(") == 32, plan
 
 
 def test_blocking_recall_is_total(spark):
@@ -467,11 +537,7 @@ def test_blocking_recall_is_total(spark):
     oracles must switch back to rows-only."""
     import os
 
-    from marc2rdf_spark.operators.linking import (
-        link_mentions,
-        mention_nodes,
-        trigram_jaccard_udf,
-    )
+    from marc2rdf_spark.operators.linking import link_mentions, mention_nodes
 
     golden = os.path.join(
         os.path.dirname(__file__), "..", "fixtures", "golden"
@@ -488,14 +554,14 @@ def test_blocking_recall_is_total(spark):
         for r in link_mentions(mentions, authorities, threshold=0.7).collect()
     }
 
+    auths = authorities.select("auth_id", "label").collect()
+    pairs = [
+        (m.mention_uri, a.auth_id, _jaccard(m.label, a.label))
+        for m in mentions.collect()
+        for a in auths
+    ]
     allpairs = (
-        mentions.select("mention_uri", F.col("label").alias("m_label"))
-        .crossJoin(
-            authorities.select("auth_id", F.col("label").alias("a_label"))
-        )
-        .withColumn(
-            "score", trigram_jaccard_udf(F.col("m_label"), F.col("a_label"))
-        )
+        spark.createDataFrame(pairs, "mention_uri string, auth_id string, score double")
         .filter(F.col("score") >= 0.7)
         .groupBy("mention_uri")
         .agg(

@@ -22,13 +22,16 @@ pytestmark = pytest.mark.skipif(
 )
 
 
+def _formatted(spark, df):
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
 def _tree_ops(spark, df):
     from tools.plan_audit import parse_tree_ops
 
-    jvm = spark._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted")
-    return parse_tree_ops(df._jdf.queryExecution().explainString(mode))
+    return parse_tree_ops(_formatted(spark, df))
 
 
 @pytest.fixture(scope="module")
@@ -91,6 +94,23 @@ def test_conversion_plan_shape(spark, queries):
     assert "SortMergeJoin" not in ops
     assert "CartesianProduct" not in ops
     assert ops.count("Exchange") <= 5
+
+
+def test_link_plan_is_jvm_only(spark, queries):
+    """Blocked linking scores in the JVM: no Python operator, candidate
+    pairs from the (block, salt) equi-join, within the audited shuffle
+    budget."""
+    import re
+
+    from tools.plan_audit import EXPECT, parse_tree_ops
+
+    formatted = _formatted(spark, queries["kg_link_entities"](spark, SF_DIR))
+    ops = parse_tree_ops(formatted)
+    assert not any("Python" in o for o in ops), ops
+    assert re.search(r"Left keys \[2\]: \[block#\d+, salt#\d+L?\]", formatted)
+    budget = EXPECT["kg_link_entities"]["max_shuffles"]
+    assert budget == 5
+    assert ops.count("Exchange") <= budget, ops
 
 
 def test_full_audit_expectations_resolve(queries):

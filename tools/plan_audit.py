@@ -205,11 +205,13 @@ EXPECT: dict[str, dict] = {
                "global ordering",
     },
     "kg_link_entities": {
-        "forbid": ["CartesianProduct"],
-        "max_shuffles": 8,
+        "forbid": ["CartesianProduct", "ArrowEvalPython",
+                   "BatchEvalPython"],
+        "max_shuffles": 5,
         "why": "blocked linking: candidate pairs come from one "
                "(block, salt) equi-join; both sides left-join one "
-               "broadcast hot-block salt table; scored by a pandas UDF",
+               "broadcast hot-block salt table; per-row MinHash, "
+               "Column Jaccard on the carried trigram arrays",
     },
     "kg_convert_dummy": {
         "require": ["MapInPandas", "BroadcastHashJoin"],
