@@ -23,6 +23,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def stored_bytes(spark, path: str) -> int:
+    """Bytes stored under ``path``, read through the Hadoop FileSystem
+    of the path's scheme (local, HDFS, S3, ...)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.getContentSummary(p).getLength()
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", help="web_pages table path (parquet/iceberg)")
@@ -85,11 +93,17 @@ def main() -> None:
 
     n = triples.count()
     dt = time.time() - t0
+    zones = ["raw_records", "raw_triples", "triples", "_lineage"]
+    if args.link:
+        zones.append("triples_canonical")
     print(json.dumps({
         "run_id": args.run_id,
         "triples": n,
         "seconds": round(dt, 2),
         "triples_per_sec": round(n / dt, 1),
+        "stored_bytes": {
+            z: stored_bytes(spark, f"{args.out}/{z}") for z in zones
+        },
     }))
     spark.stop()
 

@@ -19,7 +19,18 @@ staging zone per S5):
 
 Kill the job at any point and re-run with the same run_id: done buckets
 are skipped, partial buckets are overwritten — the final triple set is
-identical (tests/test_resume.py)."""
+identical (tests/test_resume.py).
+
+Each stage's bucket files are clustered by the stage key: raw records
+by ``url``, raw triples by ``TRIPLE_COLS + url``, final triples by
+``TRIPLE_COLS``.  Neighbouring rows then share prefixes and repeat
+values, which the Parquet encodings and the session's zstd codec
+compress (``session.py``), and a subject lookup on the final zone
+(``operators.store.select_record``) can skip row groups by their
+min/max.  The clustering extends the Sort that the partitioned write
+already runs; see ``_overwrite_partitions`` for why it must stay there
+(tests/test_storage_layout.py).  Row order is not part of any
+contract."""
 
 from __future__ import annotations
 
@@ -46,9 +57,25 @@ def _with_bucket(df: DataFrame, cols: list[str], n_buckets: int) -> DataFrame:
     )
 
 
-def _overwrite_partitions(df: DataFrame, path: str) -> None:
+def _overwrite_partitions(df: DataFrame, path: str, key: list[str]) -> None:
+    """Commit ``df``'s buckets under ``path`` by dynamic partition
+    overwrite, each bucket's rows clustered by ``key`` (the stage key:
+    ``url`` for raw records, ``TRIPLE_COLS + url`` for raw triples,
+    ``TRIPLE_COLS`` for final triples).
+
+    A partitioned write already sorts its input by ``bucket`` (Spark's
+    planned V1 write adds ``Sort [bucket]`` under ``WriteFiles``).  A
+    frame sorted within partitions by ``(bucket, *key)`` satisfies that
+    ordering, so the planner keeps this one Sort with the longer key:
+    the clustering costs no extra operator.  It must stay here, on the
+    checkpointed frame, and not move into a stage's ``build``: a sort
+    before the ``localCheckpoint`` runs inside the checkpoint, and the
+    write, which does not see that order, adds its own ``Sort [bucket]``
+    on top of it — two sorts, with the clustering surviving only because
+    Spark's sorter happens to be stable."""
     (
-        df.write.mode("overwrite")
+        df.sortWithinPartitions("bucket", *key)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(path)
@@ -63,6 +90,7 @@ def _run_stage(
     source: DataFrame,
     build: Callable[[DataFrame], DataFrame],
     path: str,
+    key: list[str],
 ) -> None:
     """Run one resumable stage over the buckets of ``source`` that have
     no done lineage row for (run_id, stage) in ``done``, the log as read
@@ -73,13 +101,14 @@ def _run_stage(
     pending input rows into the stage's bucketed output; it runs once,
     inside the eager checkpoint, and its buckets are committed by
     dynamic partition overwrite before their lineage rows are appended
-    (a bucket is done only once its data is)."""
+    (a bucket is done only once its data is).  ``key`` orders the rows
+    within each committed bucket (``_overwrite_partitions``)."""
     skip = done[(run_id, stage)]
     todo = source.filter(~F.col("bucket").isin(list(skip))) if skip else source
     if todo.isEmpty():
         return
     out = build(todo).localCheckpoint(eager=True)
-    _overwrite_partitions(out, path)
+    _overwrite_partitions(out, path, key)
     # input_rows: distinct source urls, for the stages that carry one
     input_rows = (
         F.countDistinct("url") if "url" in out.columns
@@ -133,7 +162,7 @@ def run_resumable(
         lambda todo: _with_bucket(
             extract_and_parse(todo.drop("bucket")), ["url"], n_buckets
         ),
-        records_path,
+        records_path, ["url"],
     )
 
     # ---- stage 1: convert (bucketed by url hash) -----------------------
@@ -151,7 +180,7 @@ def run_resumable(
             MappingCompiler(mapping, Library()).convert(todo.drop("bucket")),
             ["url"], n_buckets,
         ).select(*TRIPLE_COLS, "url", "bucket"),
-        raw_path,
+        raw_path, TRIPLE_COLS + ["url"],
     )
 
     # ---- stage 2: materialize (global dedup via triple-hash buckets) ---
@@ -164,7 +193,7 @@ def run_resumable(
         lambda todo: todo.dropDuplicates(TRIPLE_COLS + ["bucket"]).select(
             *TRIPLE_COLS, "bucket"
         ),
-        final_path,
+        final_path, TRIPLE_COLS,
     )
 
     return spark.read.parquet(final_path).select(*TRIPLE_COLS)

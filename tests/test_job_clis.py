@@ -62,6 +62,21 @@ def test_convert_job_cli(tmp_path):
     ).fetchone()[0]
     assert n == summary["triples"]
 
+    # the run record reports each committed zone's stored bytes as the
+    # Hadoop FileSystem counts them: every file but the local
+    # filesystem's ``.crc`` checksum sidecars
+    zones = ["raw_records", "raw_triples", "triples", "_lineage",
+             "triples_canonical"]
+    assert sorted(summary["stored_bytes"]) == sorted(zones)
+    for zone in zones:
+        on_disk = sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(os.path.join(out, zone))
+            for f in files if not f.endswith(".crc")
+        )
+        assert on_disk > 0, zone
+        assert summary["stored_bytes"][zone] == on_disk, zone
+
 
 def test_curate_job_cli(tmp_path):
     out = str(tmp_path / "curated")
