@@ -329,164 +329,3 @@ def ngram_counts(docs: DataFrame, k: int = 50) -> DataFrame:
         .orderBy(F.col("n").desc(), F.col("gram"))
         .limit(k)
     )
-
-
-def seeded_shard(
-    docs: DataFrame, n_shards: int, seed: int = 0
-) -> DataFrame:
-    """Deterministic epoch shuffle: assign every document to one of
-    ``n_shards`` output shards and give it a within-shard order key,
-    so a training run reads shard files in shard order and each reader
-    locally sorts its shard by ``ord_key`` — a full deterministic
-    permutation of the corpus per ``seed`` (new epoch = new seed)
-    WITHOUT a global sort.
-
-    Scale shape: shard assignment and the order key are both pure
-    Column expressions over (seed, doc_id), so the only movement is
-    the one hash ``repartition`` the writer needs anyway to produce
-    shard files; within-shard ordering is a per-shard local sort
-    (``sortWithinPartitions``), never a global range exchange.  The
-    permutation is reproducible across engines and runs: xxhash64 is
-    a pinned algorithm, not a session-random function.
-
-    Reference counterpart: the reference processes batches in OAI
-    arrival order (scheduler.rb:336-344); a training pipeline needs
-    the opposite — a reshuffleable, seed-addressable order.
-
-    Returns (doc_id, shard, ord_key).
-    """
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
-    h = F.xxhash64(F.lit(seed), F.col("doc_id"))
-    # independent second hash for the within-shard order so shard
-    # membership and local order are uncorrelated
-    o = F.xxhash64(F.lit(seed * 1315423911 + 1), F.col("doc_id"))
-    return docs.select(
-        "doc_id",
-        F.pmod(h, F.lit(n_shards)).cast("int").alias("shard"),
-        o.alias("ord_key"),
-    )
-
-
-TRACKING_PARAM_RE = (
-    r"&(utm_[A-Za-z0-9_]+|fbclid|gclid|msclkid|mc_cid|mc_eid|ref_src)"
-    r"=[^&#]*"
-)
-
-
-def canonical_url(url: Column) -> Column:
-    """Canonicalize a crawl URL for url-level dedup (the step before
-    the pipeline's last-write-wins groupBy(url): near-identical crawl
-    URLs of the same page otherwise defeat it): lowercase the
-    scheme+host, drop the fragment, drop default :80/:443 ports, strip
-    common tracking query params (utm_*, fbclid, gclid, ...), and
-    normalize a bare trailing '?'/'&'.
-
-    Pure Column expressions (whole-stage codegen, scan-pushable) — the
-    only subtlety is the first-param case: '?' is first rewritten to
-    '&' so every tracking param matches one uniform pattern, then the
-    first surviving '&' is restored to '?'.
-    """
-    scheme_host = r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*"
-    u = F.regexp_replace(url, r"#.*$", "")  # fragment
-    head = F.regexp_extract(u, f"({scheme_host})", 1)
-    rest = F.regexp_replace(u, scheme_host, "")
-    head = F.regexp_replace(F.lower(head), r":(80|443)$", "")
-    q = F.regexp_replace(rest, r"\?", "&")
-    q = F.regexp_replace(q, TRACKING_PARAM_RE, "")
-    q = F.regexp_replace(q, r"^([^&]*)&", "$1?")
-    q = F.regexp_replace(q, r"[?&]$", "")
-    return F.concat(head, q)
-
-
-def line_dedup(
-    docs: DataFrame, min_doc_frac: float = 0.01, min_docs: int = 2
-) -> DataFrame:
-    """Cross-document line deduplication (CCNet/RefinedWeb cleanup):
-    remove every line that occurs — after whitespace-trim — in at
-    least ``max(min_docs, min_doc_frac * n_docs)`` distinct documents
-    (navigation chrome, cookie banners, boilerplate headers), and
-    reassemble each document's remaining lines in original order.
-
-    Scale shape: one posexplode; the line document-frequency
-    aggregation and the join back are both keyed on the 8-byte
-    ``xxhash64`` of the trimmed line, so full line STRINGS never enter
-    a shuffle — only in the final per-document reassembly groupBy do
-    surviving lines move, and those are grouped by doc_id exactly like
-    every other per-doc operator here.  The corpus document count
-    rides the same aggregation as a NULL-sentinel row (the
-    ``boilerplate_score`` trick) so no separate count job runs.
-
-    Returns (doc_id, text_clean, n_lines, n_removed).
-    """
-    # one NULL sentinel element is appended to every doc's line array:
-    # its NULL hash group in the frequency agg has df == n_docs exactly
-    # (blank lines also hash to NULL — they are never dedup candidates
-    # and never join the common set — and the distinct() below keeps
-    # the NULL group one row per doc regardless)
-    lines = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.concat(
-                F.split(F.col("text"), r"\n"),
-                F.array(F.lit(None).cast("string")),
-            )
-        ).alias("pos", "line"),
-    ).withColumn(
-        "lh",
-        F.when(
-            F.col("line").isNull() | (F.trim(F.col("line")) == ""),
-            F.lit(None).cast("long"),
-        ).otherwise(F.xxhash64(F.trim(F.col("line")))),
-    )
-    df_all = (
-        lines.select("doc_id", "lh")
-        .distinct()
-        .groupBy("lh")
-        .agg(F.count("*").alias("df"))
-        .localCheckpoint(eager=True)
-    )
-    n_docs_row = df_all.filter(F.col("lh").isNull()).select(
-        F.col("df").alias("n_docs")
-    )
-    common = (
-        df_all.filter(F.col("lh").isNotNull())
-        .crossJoin(F.broadcast(n_docs_row))
-        .filter(
-            F.col("df")
-            >= F.greatest(
-                F.lit(min_docs),
-                F.ceil(F.lit(min_doc_frac) * F.col("n_docs")).cast("int"),
-            )
-        )
-        .select("lh", F.lit(True).alias("common"))
-    )
-    kept = (
-        lines.filter(F.col("line").isNotNull())  # sentinel rows out
-        .join(common, "lh", "left")
-        .withColumn("drop", F.coalesce(F.col("common"), F.lit(False)))
-    )
-    agg = kept.groupBy("doc_id").agg(
-        F.count("*").alias("n_lines"),
-        F.sum(F.col("drop").cast("int")).alias("n_removed"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~F.col("drop"),
-                            F.struct(F.col("pos"), F.col("line")),
-                        )
-                    )
-                ),
-                lambda s: s.line,
-            ),
-            "\n",
-        ).alias("text_clean"),
-    )
-    return agg.select(
-        "doc_id",
-        "text_clean",
-        F.col("n_lines").cast("long").alias("n_lines"),
-        F.col("n_removed").cast("long").alias("n_removed"),
-    )

@@ -517,134 +517,3 @@ def embedding_near_dups_lsh(
         .filter(F.col("sim") >= threshold)
         .select("a_id", "b_id", F.round("sim", 4).alias("sim"))
     )
-
-
-# ---------------------------------------------------------------------------
-# near-dup cluster canonicalization and duplicate-span removal
-# ---------------------------------------------------------------------------
-
-def near_dup_clusters(
-    docs: DataFrame, threshold: float = 0.8, **lsh_kwargs
-) -> DataFrame:
-    """Turn near-duplicate PAIRS into a dedup DECISION: connected
-    components over the verified-Jaccard pair graph, one canonical
-    document per cluster (the numeric-min doc_id), every corpus doc
-    labelled.  Returns (doc_id, canonical_id, is_canonical) — the
-    filter ``is_canonical`` is the RefinedWeb/SlimPajama-style fuzzy
-    dedup keep-set.
-
-    Pairs come from the banded MinHash-LSH join (bounded buckets) and
-    the component step reuses ``connected_components`` — the same
-    alternating large/small-star loop that canonicalizes entity URIs
-    (O(log n) rounds, 16-byte hashed frontier rows), so a transitively
-    linked dup chain (A~B, B~C, but A!~C) collapses to ONE keeper,
-    which pairwise dropping gets wrong in both directions.  doc_ids
-    ride as zero-padded fixed-width strings so the component label
-    (lexicographic min) IS the numeric min.
-
-    Reference counterpart: marc2rdf merges duplicate authority URIs by
-    sameAs closure at conversion time (rdfmodeler.rb relation blocks);
-    this is the same closure applied to the training-corpus dup graph.
-    """
-    from marc2rdf_spark.operators.components import connected_components
-
-    pairs = near_duplicates(docs, threshold=threshold, **lsh_kwargs)
-    edges = pairs.select(
-        F.format_string("%019d", F.col("a")).alias("left_uri"),
-        F.format_string("%019d", F.col("b")).alias("right_uri"),
-    )
-    comp = connected_components(edges).select(
-        F.col("uri").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("canonical_id"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("canonical_id", F.col("doc_id")).alias(
-                "canonical_id"
-            ),
-        )
-        .withColumn(
-            "is_canonical", F.col("doc_id") == F.col("canonical_id")
-        )
-    )
-
-
-def duplicate_span_removal(docs: DataFrame, k: int = 8) -> DataFrame:
-    """Exact duplicate-SPAN removal (Lee et al. 2021, "Deduplicating
-    Training Data Makes Language Models Better"): any run of ``k``
-    consecutive normalized tokens that occurs more than once in the
-    corpus (across documents OR repeated within one) is removed from
-    every occurrence except the globally first (min (doc_id, pos)).
-    Returns (doc_id, text_clean, n_tokens, n_removed_tokens).
-
-    Spark plan: one posexplode of rolling k-token window hashes
-    (doc_id, pos, xxhash64(gram)) — the corpus's token count in rows,
-    8-byte keys; duplicated keys found by a count/min_by aggregation
-    (map-side combine collapses same-doc repeats early); the join back
-    to mark losing occurrences reuses the aggregation's hash
-    partitioning on the window key.  Reconstruction is per-document
-    Column logic: a token survives unless a removed span covers it
-    (O(tokens x removed_spans) per doc — spans per doc are few; docs
-    are bounded).  The suffix-array formulation of the paper is an
-    offline single-node algorithm; this windowed form is its
-    shuffle-native equivalent at fixed k.
-    """
-    toks = docs.select(
-        "doc_id", F.split(normalized_text(F.col("text")), " ").alias("w")
-    )
-    n = F.size("w")
-    # guard: sequence(0, stop) with stop < 0 would produce a DESCENDING
-    # range (Spark infers step -1), not an empty one
-    idx = F.when(n >= k, F.sequence(F.lit(0), n - k)).otherwise(
-        F.array().cast("array<int>")
-    )
-    wins = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                idx,
-                lambda i: F.xxhash64(F.array_join(F.slice("w", i + 1, k), " ")),
-            )
-        ).alias("pos", "h"),
-    )
-    dup = (
-        wins.groupBy("h")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.min(F.struct("doc_id", "pos")).alias("first"),
-        )
-        .filter(F.col("cnt") > 1)
-        .select("h", "first")
-    )
-    losers = (
-        wins.join(dup, "h")
-        .filter(
-            (F.col("doc_id") != F.col("first.doc_id"))
-            | (F.col("pos") != F.col("first.pos"))
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_set("pos").alias("rm"))
-    )
-    merged = toks.join(losers, "doc_id", "left").withColumn(
-        "rm", F.coalesce("rm", F.array().cast("array<int>"))
-    )
-    covered = lambda i: F.exists(  # noqa: E731
-        F.col("rm"), lambda p: (p <= i) & (i < p + k)
-    )
-    kept = F.filter(
-        F.sequence(F.lit(0), F.size("w") - 1),
-        lambda i: ~covered(i),
-    )
-    return merged.select(
-        "doc_id",
-        F.array_join(
-            F.transform(kept, lambda i: F.element_at("w", i + 1)), " "
-        ).alias("text_clean"),
-        F.size("w").cast("long").alias("n_tokens"),
-        (F.size("w") - F.size(kept)).cast("long").alias(
-            "n_removed_tokens"
-        ),
-    )

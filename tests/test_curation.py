@@ -3,8 +3,6 @@ PII scrubbing, blocklist filter, mix sampling, n-gram counts) —
 hand-computed expectations on crafted rows, independent of the DuckDB
 contract oracle."""
 
-from pyspark.sql import functions as F
-
 
 def _docs(spark, rows):
     return spark.createDataFrame(
@@ -110,105 +108,3 @@ def test_ngram_counts_topk_tiebreak(spark):
     # -> all three grams have count 2; top-2 takes the 2 smallest grams
     got = [(r.gram, r.n) for r in ngram_counts(docs, k=2).collect()]
     assert got == [("a b", 2), ("b c", 2)]
-
-
-def test_seeded_shard_permutation_properties(spark):
-    """Epoch shuffle: every doc lands in exactly one shard, the
-    mapping is deterministic per seed, different seeds give a
-    different permutation, shards are roughly balanced, and the
-    (shard, ord_key) order never needs a global sort."""
-    import pytest as _pytest
-
-    from marc2rdf_spark.operators.curation import seeded_shard
-
-    docs = spark.range(2000).select(
-        F.concat(F.lit("d"), F.col("id")).alias("doc_id")
-    )
-    a = seeded_shard(docs, 16, seed=7)
-    rows = {r.doc_id: (r.shard, r.ord_key) for r in a.collect()}
-    assert len(rows) == 2000  # exactly-once
-    # deterministic: a second evaluation is identical
-    again = {r.doc_id: (r.shard, r.ord_key) for r in
-             seeded_shard(docs, 16, seed=7).collect()}
-    assert rows == again
-    # different seed -> different permutation (overwhelmingly)
-    other = {r.doc_id: (r.shard, r.ord_key) for r in
-             seeded_shard(docs, 16, seed=8).collect()}
-    assert rows != other
-    # all shards in range and roughly balanced (expected 125/shard)
-    from collections import Counter
-
-    sizes = Counter(s for s, _ in rows.values())
-    assert set(sizes) <= set(range(16))
-    assert min(sizes.values()) > 60 and max(sizes.values()) < 200
-    # order keys unique within this corpus (collision would make the
-    # local sort nondeterministic between equal keys)
-    assert len({o for _, o in rows.values()}) == 2000
-    with _pytest.raises(ValueError):
-        seeded_shard(docs, 0)
-
-
-def test_canonical_url(spark):
-    from marc2rdf_spark.operators.curation import canonical_url
-
-    cases = [
-        # (raw, expected)
-        ("HTTP://Example.COM:80/Path?a=1#frag",
-         "http://example.com/Path?a=1"),
-        ("https://ex.org:443/x", "https://ex.org/x"),
-        # tracking params stripped wherever they sit, incl. first
-        ("https://ex.org/p?utm_source=tw&x=1&utm_medium=m",
-         "https://ex.org/p?x=1"),
-        ("https://ex.org/p?x=1&fbclid=abc", "https://ex.org/p?x=1"),
-        ("https://ex.org/p?gclid=z", "https://ex.org/p"),
-        # path case preserved, only scheme+host lowered
-        ("https://Ex.org/CaseSensitive/Path",
-         "https://ex.org/CaseSensitive/Path"),
-        # no scheme: passes through the same param logic unharmed
-        ("relative/path?utm_campaign=c", "relative/path"),
-        # port other than default kept
-        ("http://ex.org:8080/x?a=2", "http://ex.org:8080/x?a=2"),
-        # fragment-only difference collapses
-        ("https://ex.org/x#sec1", "https://ex.org/x"),
-    ]
-    df = spark.createDataFrame([(r,) for r, _ in cases], "url string")
-    got = [r.c for r in df.select(
-        canonical_url(F.col("url")).alias("c")).collect()]
-    assert got == [e for _, e in cases]
-
-
-def test_line_dedup_cross_document(spark):
-    from marc2rdf_spark.operators.curation import line_dedup
-
-    banner = "Accept cookies to continue"
-    docs = spark.createDataFrame(
-        [
-            ("d1", f"{banner}\nunique one\n\nkeep me"),
-            ("d2", f"{banner}\nunique two"),
-            ("d3", f"unique three\n{banner}"),
-            ("d4", "no banner here"),
-            # repeated line INSIDE one doc only: df counts distinct
-            # docs, so it survives
-            ("d5", "solo dup\nsolo dup"),
-        ],
-        "doc_id string, text string",
-    )
-    out = {r.doc_id: r for r in line_dedup(docs, min_docs=3).collect()}
-    assert out["d1"].text_clean == "unique one\n\nkeep me"
-    assert out["d2"].text_clean == "unique two"
-    assert out["d3"].text_clean == "unique three"
-    assert out["d4"].text_clean == "no banner here"
-    assert out["d5"].text_clean == "solo dup\nsolo dup"
-    assert out["d1"].n_removed == 1 and out["d1"].n_lines == 4
-    assert out["d4"].n_removed == 0
-    # frac threshold form: banner is in 3/5 docs = 0.6 >= ceil(0.5*5)=3
-    out2 = {r.doc_id: r for r in
-            line_dedup(docs, min_doc_frac=0.5, min_docs=2).collect()}
-    assert out2["d2"].text_clean == "unique two"
-    # trim-insensitive matching: '  banner  ' matches 'banner'
-    docs3 = spark.createDataFrame(
-        [("a", f"  {banner}  \nx"), ("b", banner), ("c", banner)],
-        "doc_id string, text string",
-    )
-    out3 = {r.doc_id: r for r in line_dedup(docs3, min_docs=3).collect()}
-    assert out3["a"].text_clean == "x"

@@ -221,3 +221,32 @@ def test_audit_reports_a_raising_query_and_goes_on(
                    for ln in lines), (name, lines)
     report = out.read_text()
     assert "| docs_mix_sample |" in report and "FileNotFoundError" in report
+
+
+def _committed_scan_rows(query):
+    """``(scan, columns read, pushed filters)`` rows of ``query`` in the
+    committed BENCH/PLANS.md scan-pruning table."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "BENCH", "PLANS.md")
+    with open(path) as f:
+        text = f.read()
+    table = text.split("## Scan pruning", 1)[1]
+    rows = []
+    for line in table.splitlines():
+        cells = line.strip().strip("|").split(" | ")
+        if len(cells) == 4 and cells[0].strip() == query:
+            rows.append(tuple(c.strip() for c in cells[1:]))
+    return rows
+
+
+def test_committed_scan_table_matches_the_plan(spark, queries):
+    """The committed PLANS.md scan rows are what the audit prints today:
+    a change that prunes or widens a scan must regenerate the table."""
+    from tools.plan_audit import parse_scans
+
+    for query in ("kg_select_record", "docs_mix_sample"):
+        scans = parse_scans(_formatted(spark, queries[query](spark, SF_DIR)))
+        got = [(s["loc"], str(s["cols"]), s["pushed"] or "—") for s in scans]
+        assert got, query
+        assert got == _committed_scan_rows(query), query
